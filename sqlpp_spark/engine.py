@@ -12,14 +12,18 @@ Mirrors the reference's runtime shapes (SURVEY.md §2.10):
   crash-atomic via the versioned commit protocol below (or real Delta
   ACID commits when delta-spark is on the classpath); the plan/row
   semantics (ON CONFLICT, RETURNING, joined UPDATE ... FROM) match the
-  reference (analyze.ml:826-998)
+  reference (analyze.ml:826-998). A plain write runs one Spark job (the
+  version write): the engine remembers the schema of each version it
+  commits, so reading it back is a file listing, not footer inference.
+  RETURNING adds one more job, a local checkpoint of the affected rows
+  held in executor block storage; it lives as long as the returned
+  DataFrame and does not survive the loss of an executor
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from typing import Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -182,6 +186,19 @@ def flip_current(path: str, vdir: str) -> None:
                 pass
 
 
+def _version_identity(path: str) -> Optional[tuple]:
+    """Identity of a managed table's active version: its data dir plus
+    the dir's inode and mtime, so a table dropped and re-created under
+    the same path (whose first version is ``_v_0`` again) does not
+    match a record of the old one. None if there is no such dir."""
+    data_dir = managed_data_dir(path)
+    try:
+        st = os.stat(data_dir)
+    except FileNotFoundError:
+        return None
+    return data_dir, st.st_ino, st.st_mtime_ns
+
+
 def commit_version(path: str, write) -> str:
     """Run ``write(new_version_dir)`` then atomically flip _CURRENT to
     it. Returns the committed data dir."""
@@ -290,6 +307,10 @@ class SqlppEngine:
         # active migration transaction (manage.Migrate sets/clears it);
         # when set, storage writes stage instead of committing
         self._txn: Optional[StagedTxn] = None
+        # table path -> (identity of the version this engine committed,
+        # its schema); lets DML read that version back without a
+        # schema-inference job while it is still the active one
+        self._committed: Dict[str, tuple] = {}
 
     # -- analysis ----------------------------------------------------------
 
@@ -382,27 +403,51 @@ class SqlppEngine:
             # the staged version while on-disk _CURRENT stays put
             self.register_df(name, self.spark.read.parquet(staged))
             return
+        committed = self._commit(path, df)
+        self.managed_paths[name] = path
+        self.register_df(name, committed)
+
+    def _commit(self, path: str, df: DataFrame) -> DataFrame:
+        """Commit ``df`` as the table's new active version and return a
+        fresh read of it. The schema of the written frame is remembered
+        with the version's identity, so the read back (and the next
+        ``_managed_df`` while no one else commits) infers nothing."""
         if _HAS_DELTA:  # pragma: no cover - delta not in this image
             df.write.format("delta").mode("overwrite").save(path)
-        else:
-            commit_version(path, lambda d: df.write.parquet(d))
-        self.managed_paths[name] = path
-        self.register_df(name, self._read_managed_path(path))
+            return self._read_managed_path(path)
+        commit_version(path, lambda d: df.write.parquet(d))
+        schema = df.schema
+        self._committed[path] = (_version_identity(path), schema)
+        return self._read_managed_path(path, schema)
 
-    def _read_managed_path(self, path: str) -> DataFrame:
-        """Read a managed table's ACTIVE version."""
+    def _read_managed_path(
+        self, path: str, schema: Optional[T.StructType] = None
+    ) -> DataFrame:
+        """Read a managed table's ACTIVE version. A known ``schema``
+        skips parquet footer inference, a Spark job; Spark reads every
+        field of a file source as nullable, which is also what
+        inference returns for parquet Spark wrote."""
         if _HAS_DELTA:  # pragma: no cover
             return self.spark.read.format("delta").load(path)
-        return self.spark.read.parquet(managed_data_dir(path))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(managed_data_dir(path))
 
     def _managed_df(self, table: str, path: str) -> DataFrame:
         """Current contents of a managed table for DML: inside a
         migration transaction the catalog entry points at staged
         (uncommitted) data — read-your-writes; otherwise read the
-        committed _CURRENT version."""
+        committed _CURRENT version. The read is always a fresh one, never
+        the catalog's frame, so a statement that also reads the table
+        through the catalog gets distinct expression IDs. When the active
+        version is still the one this engine committed, its schema is
+        known; after a commit by anyone else (another engine,
+        ``manage.Migrate``) it is inferred again."""
         if self._txn is not None and table in self.catalog:
             return self.catalog[table]
-        return self._read_managed_path(path)
+        ident, schema = self._committed.get(path, (None, None))
+        if ident != _version_identity(path):
+            schema = None
+        return self._read_managed_path(path, schema)
 
     # -- query API ---------------------------------------------------------
 
@@ -896,17 +941,15 @@ class SqlppEngine:
             else:
                 name = f"_{i}"
             cols.append(comp.expr(elab, binds, {}).alias(name))
-        # materialize: the caller rewrites the table right after, which
-        # would invalidate a lazy plan reading the old files. Checkpoint
-        # to temp parquet and re-read — rows stay distributed on the
-        # executors (a collect() here would funnel every RETURNING row
-        # through the driver). The temp dir lives until the session
-        # ends; RETURNING frames are small relative to the rewrite the
-        # caller performs anyway.
-        out = base.select(*cols)
-        tmp = tempfile.mkdtemp(prefix="sqlpp_returning_")
-        out.write.mode("overwrite").parquet(tmp)
-        return self.spark.read.parquet(tmp)
+        # materialize: the caller rewrites the table right after, and a
+        # later commit deletes the version a lazy plan would read. One
+        # eager local checkpoint (one job) keeps the rows in executor
+        # block storage — never funnelled through the driver the way a
+        # collect() would be — and cuts the plan's tie to the old files.
+        # The blocks live as long as the returned DataFrame: Spark's
+        # ContextCleaner frees them once it is garbage-collected. Like
+        # any local checkpoint, they do not survive losing an executor.
+        return base.select(*cols).localCheckpoint(eager=True)
 
     def _primary_key(self, table: str) -> List[str]:
         ti = self.env.tables.get(table)
@@ -927,11 +970,7 @@ class SqlppEngine:
             staged = self._txn.stage_write(path, df)
             self.catalog[table] = self.spark.read.parquet(staged)
             return
-        if _HAS_DELTA:  # pragma: no cover - delta not in this image
-            df.write.format("delta").mode("overwrite").save(path)
-        else:
-            commit_version(path, lambda d: df.write.parquet(d))
-        self.catalog[table] = self._read_managed_path(path)
+        self.catalog[table] = self._commit(path, df)
 
     def prepare_select_in(self, src: str, sel: A.Select):
         an = self._an(src)

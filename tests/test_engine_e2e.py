@@ -683,22 +683,159 @@ def test_on_conflict_requires_primary_key(spark, tmp_path):
         )
 
 
-def test_returning_stays_off_driver(todo_engine):
-    """RETURNING materializes via a temp-parquet checkpoint, not a
-    driver-side collect: the returned frame must read from files
-    (distributed scan), never a LocalTableScan of collected rows."""
+def test_returning_stays_off_driver(todo_engine, tmp_path):
+    """The RETURNING frame never funnels rows through the driver (no
+    LocalTableScan of collected rows), outlives the table version it was
+    computed from and a cache clear, and leaves no temp dir behind."""
+    import contextlib
+    import glob
+    import io
+    import os
+    import tempfile
+
+    from sqlpp_spark.engine import managed_data_dir
+
+    pattern = os.path.join(tempfile.gettempdir(), "sqlpp_returning_*")
+    tmp_before = set(glob.glob(pattern))
+    source = managed_data_dir(str(tmp_path / "todos"))
     ret = todo_engine.exec(
         "update todos set done = true where id = 2 returning id, title"
     )
-    import contextlib, io
-
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         ret.explain()
-    plan = buf.getvalue()
-    assert "LocalTableScan" not in plan
-    assert "parquet" in plan.lower()
-    assert [r.id for r in ret.collect()] == [2]
+    assert "LocalTableScan" not in buf.getvalue()
+
+    todo_engine.exec("update todos set title = 'moved' where id = 2")
+    todo_engine.exec("delete from todos where id = 1")
+    assert not os.path.exists(source)
+    todo_engine.spark.catalog.clearCache()
+    assert [tuple(r) for r in ret.collect()] == [(2, "ship engine")]
+    assert set(glob.glob(pattern)) == tmp_before
+
+
+def _exec_jobs(eng, src):
+    """Spark jobs run by ``eng.exec(src)`` itself — not by collecting
+    the frame it returns."""
+    sc = eng.spark.sparkContext
+    group = f"dml-jobs-{id(eng)}-{hash(src)}"
+    sc.setJobGroup(group, src)
+    try:
+        eng.exec(src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_write_job_counts(todo_engine):
+    """A plain write runs one job (the version write): the version it
+    reads and the one it commits both have a known schema, so neither
+    read back infers it. RETURNING adds exactly one job, the
+    checkpoint of the affected rows."""
+    assert _exec_jobs(
+        todo_engine,
+        "insert into todos (id, title, done) values (3, 'profile', false)",
+    ) == 1
+    assert _exec_jobs(todo_engine, "delete from todos where id = 3") == 1
+    assert _exec_jobs(
+        todo_engine, "update todos set done = true where id = 2"
+    ) == 1
+    assert _exec_jobs(
+        todo_engine,
+        "insert into todos (id, title, done) values (4, 'x', false) "
+        "returning id",
+    ) == 2
+    assert _exec_jobs(
+        todo_engine,
+        "update todos set title = 'y' where id = 4 returning id, title",
+    ) == 2
+
+
+def test_dml_sees_commit_by_another_engine(spark, todo_engine, tmp_path):
+    """A commit to the same path by a second engine replaces the version
+    the first engine remembers: its next DML builds on the new version,
+    and its next read sees both changes."""
+    from sqlpp_spark.engine import managed_data_dir
+
+    path = str(tmp_path / "todos")
+    other = SqlppEngine(spark)
+    other.add_decls(
+        "create table todos (id int not null primary key, "
+        "title string not null, done bool not null);"
+    )
+    other.create_managed(
+        "todos", path, spark.read.parquet(managed_data_dir(path))
+    )
+    other.exec("insert into todos (id, title, done) values (5, 'other', false)")
+    todo_engine.exec("update todos set done = true where id = 5")
+    rows = todo_engine.fetch_list("select id, title, done from todos order by id")
+    assert [tuple(r) for r in rows] == [
+        (1, "write tests", False), (2, "ship engine", False),
+        (5, "other", True),
+    ]
+
+
+def test_dml_sees_table_recreated_under_same_path(spark, todo_engine, tmp_path):
+    """A table dropped and re-created under the same path starts again
+    at ``_v_0``; the first engine must not take it for the ``_v_0`` it
+    committed itself and read it with that version's schema."""
+    import shutil
+
+    from sqlpp_spark.engine import managed_data_dir
+
+    path = str(tmp_path / "todos")
+    shutil.rmtree(path)
+    other = SqlppEngine(spark)
+    wider = spark.createDataFrame(
+        [(1, "a", False, "kept"), (2, "b", False, "kept")],
+        "id long, title string, done boolean, note string",
+    )
+    other.create_managed("todos", path, wider)
+    todo_engine.exec("delete from todos where id = 1")
+    got = spark.read.parquet(managed_data_dir(path))
+    assert got.columns == ["id", "title", "done", "note"]
+    assert [tuple(r) for r in got.collect()] == [(2, "b", False, "kept")]
+
+
+def test_insert_widening_schema_matches_disk(spark, tmp_path):
+    """After an INSERT whose table was created from a narrower Spark
+    type than the declared one, the schema the engine remembers is the
+    one on disk."""
+    from sqlpp_spark.engine import managed_data_dir
+
+    eng = SqlppEngine(spark)
+    eng.add_decls("create table t (id int not null primary key, v int not null);")
+    path = str(tmp_path / "t")
+    eng.create_managed(
+        "t", path, spark.createDataFrame([(1, 10)], "id int, v int")
+    )
+    eng.exec("insert into t (id, v) values (2, 20)")
+    on_disk = spark.read.parquet(managed_data_dir(path)).schema
+    assert eng.catalog["t"].schema == on_disk
+    assert eng._managed_df("t", path).schema == on_disk
+    rows = eng.fetch_list("select id, v from t order by id")
+    assert [tuple(r) for r in rows] == [(1, 10), (2, 20)]
+
+
+def test_dml_self_reference(spark, tmp_path):
+    """Statements that read the table they write: the DML's own read
+    and the catalog's read of the table must not share expression IDs."""
+    eng = SqlppEngine(spark)
+    eng.add_decls("create table t (id int not null primary key, v int not null);")
+    eng.create_managed(
+        "t", str(tmp_path / "t"),
+        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id long, v long"),
+    )
+    eng.exec(
+        "insert into t (id, v) select id, v + 1 as v from t on conflict replace"
+    )
+    rows = eng.fetch_list("select id, v from t order by id")
+    assert [tuple(r) for r in rows] == [(1, 11), (2, 21), (3, 31)]
+    eng.exec(
+        "update t set v = t2.v + 100 from t as t2 where t.id = t2.id + 1"
+    )
+    rows = eng.fetch_list("select id, v from t order by id")
+    assert [tuple(r) for r in rows] == [(1, 11), (2, 111), (3, 121)]
 
 
 def test_bare_offset_executes(engine, duck):
