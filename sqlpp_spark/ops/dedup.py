@@ -133,17 +133,6 @@ def shingle_hashes(
     return _shingle_rows(df, text_col, id_col, k, fast_hash).distinct()
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = 3, n_perms: int = N_PERMS,
-) -> DataFrame:
-    """One row per doc with columns mh0..mh{n-1}. Single shuffle:
-    explode shingles map-side, then groupBy(doc) with n_perms min
-    aggregates (partial aggregation keeps the shuffle tiny)."""
-    sh = shingle_hashes(df, text_col, id_col, k)
-    return _signatures_from_sh(sh, id_col, n_perms)
-
-
 def _signatures_from_sh(sh: DataFrame, id_col: str, n_perms: int = N_PERMS) -> DataFrame:
     aggs = [
         F.min(perm_hash(F.col("sh_hash"), i)).alias(f"mh{i}") for i in range(n_perms)
@@ -244,39 +233,6 @@ def _band_pairs(
         # caller releases via ops.release_intermediates(result)
         out._sqlpp_persisted = [banded]
     return out
-
-
-def jaccard_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for given candidate pairs (id_a,id_b):
-    join each side's shingle hashes, count intersection and sizes."""
-    sh = shingle_hashes(df, text_col, id_col, k)
-    return _jaccard_from_sh(sh, pairs, id_col)
-
-
-def _jaccard_from_sh(sh: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh_hash")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh_hash")
-    inter = (
-        pairs.join(a, on="id_a")
-        .join(b, on=["id_b", "sh_hash"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), on="id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), on="id_b")
-        .select(
-            "id_a", "id_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
 
 
 def shingle_hash_arrays(

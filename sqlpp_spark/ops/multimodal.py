@@ -24,8 +24,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -82,32 +83,91 @@ def synthesize_media(
     )
 
 
-def _png_media_batches(id_col: str):
-    """Per-batch PNG synthesis closure shared by the staged
-    (``synthesize_png_media``) and fused (``synthesize_and_decode_media``)
-    paths — one encode contract keeps the two paths row-identical by
-    construction (the WARC/JPEG-fusion argument, OPTIMIZATION_r19.md
-    #10/#12)."""
+# ---------------------------------------------------------------------------
+# Media families: one per-id encoder per format, one batch loop for all
+# ---------------------------------------------------------------------------
+#
+# Each encoder turns a doc id into one encoded payload; its docstring is
+# the family's oracle contract. ``synthesize`` (staged: the payload
+# leaves the Python worker) and ``synthesize_and_decode`` (fused: the
+# payload is decoded in the same worker pass) run the same batch loop
+# over the same encoder, so the two are row-identical by construction.
+# The cached constants below are shared by every id in the process, so
+# they are read-only.
+
+
+@functools.cache
+def _gray_palette():
+    """256-entry RGB palette whose index equals its gray value."""
     import numpy as np
 
-    from sqlpp_spark.ops import imagecodec as IC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                out["media_id"].append(did)
-                out["payload"].append(IC.encode_png(img))
-            yield pd.DataFrame(out)
-
-    return gen
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    gray.setflags(write=False)
+    return gray
 
 
-def synthesize_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+@functools.cache
+def _tile_grid():
+    """(cy, cx) coordinates of the 9x8 dHash tile grid."""
+    import numpy as np
+
+    grid = np.mgrid[0:8, 0:9]
+    grid.setflags(write=False)
+    return grid
+
+
+@functools.cache
+def _webp_lossy_streams() -> tuple[bytes, ...]:
+    import base64
+
+    from sqlpp_spark.ops.vp8codec import CONFORMANCE_STREAMS
+
+    return tuple(
+        base64.b64decode(CONFORMANCE_STREAMS[k])
+        for k in ("noise48_q75", "grad64x80_q40", "mixed33x47_q90")
+    )
+
+
+@functools.cache
+def _heif_streams() -> tuple[bytes, ...]:
+    import base64
+
+    from sqlpp_spark.ops.mp4box import HEIF_CONFORMANCE_STREAMS
+
+    return tuple(
+        base64.b64decode(HEIF_CONFORMANCE_STREAMS[k])
+        for k in ("avif_rgb", "avif_alpha", "heic_rgb", "heic_alpha")
+    )
+
+
+def _formula(did: int, shift: int = 0, pad: int = 4):
+    """The closed-form gray image most families encode: uint8 pixel
+    (x, y) = (x + 3y + id + shift) mod 256 on a w×h canvas,
+    w = id%13+pad, h = id%11+pad."""
+    import numpy as np
+
+    yy, xx = np.mgrid[0:did % 11 + pad, 0:did % 13 + pad]
+    return ((xx + 3 * yy + did + shift) % 256).astype(np.uint8)
+
+
+def _gradient_rgb(did: int):
+    """w×h RGB gradient, w = id%13+9, h = id%11+9: R ramps over x, G
+    over y, B = (x + y + id) mod 256."""
+    import numpy as np
+
+    w, h = did % 13 + 9, did % 11 + 9
+    yy, xx = np.mgrid[0:h, 0:w]
+    return np.stack(
+        [
+            (xx * 255 // max(w - 1, 1)),
+            (yy * 255 // max(h - 1, 1)),
+            ((xx + yy + did) % 256),
+        ],
+        axis=-1,
+    ).astype(np.uint8)
+
+
+def _png(did: int) -> bytes:
     """REAL PNG payloads with CLOSED-FORM pixel content: per doc, a
     grayscale w×h image with pixel(x, y) = (x + 3y + doc_id) mod 256,
     w = doc_id%13+4, h = doc_id%11+4, encoded by the pure-numpy codec
@@ -115,13 +175,40 @@ def synthesize_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     geometry and EXACT pixel mean are computable in plain SQL — this is
     what lets a DuckDB oracle verify real image decode end-to-end
     (something a corpus of opaque bytes can never offer)."""
-    gen = _png_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
+    from sqlpp_spark.ops import imagecodec as IC
+
+    return IC.encode_png(_formula(did))
 
 
-def synthesize_webp_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _png_variants(did: int) -> bytes:
+    """CLOSED-FORM pixels through the HARD PNG paths: per doc the
+    formula image ((x + 3y + id) mod 256) is encoded rotating (id mod 4)
+    through Adam7 interlacing, palette color (the formula's row-0
+    values as a 256-entry palette — i.e. a palette image whose
+    looked-up gray equals the formula), 16-bit samples (value << 8, so
+    mean_byte is mean*256), and the plain baseline — one corpus
+    exercising deinterlacing, PLTE lookup and 16-bit unpacking with
+    SQL-recomputable decoded stats."""
+    import numpy as np
+
+    from sqlpp_spark.ops import imagecodec as IC
+
+    img = _formula(did)
+    variant = did % 4
+    if variant == 0:
+        return IC.encode_png(img, interlace=True)
+    if variant == 1:
+        # gray palette: palette index == gray value, so the decoded RGB
+        # planes all equal the formula
+        return IC.encode_png_palette(
+            _gray_palette()[img], interlace=did % 2 == 1
+        )
+    if variant == 2:
+        return IC.encode_png(img.astype(np.uint16) << 8, interlace=True)
+    return IC.encode_png(img)
+
+
+def _webp(did: int) -> bytes:
     """REAL WebP (VP8L lossless) payloads with CLOSED-FORM pixels: per
     doc a w×h RGB image with gray value ((x + 3y + id) mod 8) * 36,
     w = id%13+4, h = id%11+4, encoded by ops/webpcodec.py. The encoder
@@ -131,53 +218,31 @@ def synthesize_webp_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     LZ77, and a meta-prefix (huffman-image) stream — so ONE SQL oracle
     certifies every inverse-transform decode path at once (all six
     variants decode to the identical formula)."""
-    gen = _webp_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
-
-
-def _webp_media_batches(id_col: str):
-    """Per-batch WebP(VP8L) synthesis closure — shared staged/fused
-    encode contract (see ``_png_media_batches``)."""
     import numpy as np
 
     from sqlpp_spark.ops import webpcodec as WC
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                gray = (((xx + 3 * yy + did) % 8) * 36).astype(np.uint8)
-                img = np.stack([gray, gray, gray], axis=-1)
-                variant = did % 6
-                if variant == 0:
-                    data = WC.encode_webp_lossless(img, use_lz77=False)
-                elif variant == 1:
-                    data = WC.encode_webp_lossless(img, subtract_green=True)
-                elif variant == 2:
-                    data = WC.encode_webp_lossless(img, palette=True)
-                elif variant == 3:
-                    data = WC.encode_webp_lossless(
-                        img, predictor_mode=(did // 6) % 14, cache_bits=4
-                    )
-                elif variant == 4:
-                    data = WC.encode_webp_lossless(
-                        img, color_transform=(37, 220, 100), cache_bits=3
-                    )
-                else:
-                    data = WC.encode_webp_lossless(img, huffman_bits=2)
-                out["media_id"].append(did)
-                out["payload"].append(data)
-            yield pd.DataFrame(out)
-
-    return gen
+    gray = (_formula(did) % 8) * 36
+    img = np.stack([gray, gray, gray], axis=-1)
+    variant = did % 6
+    if variant == 0:
+        return WC.encode_webp_lossless(img, use_lz77=False)
+    if variant == 1:
+        return WC.encode_webp_lossless(img, subtract_green=True)
+    if variant == 2:
+        return WC.encode_webp_lossless(img, palette=True)
+    if variant == 3:
+        return WC.encode_webp_lossless(
+            img, predictor_mode=(did // 6) % 14, cache_bits=4
+        )
+    if variant == 4:
+        return WC.encode_webp_lossless(
+            img, color_transform=(37, 220, 100), cache_bits=3
+        )
+    return WC.encode_webp_lossless(img, huffman_bits=2)
 
 
-def synthesize_webp_lossy_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _webp_lossy(did: int) -> bytes:
     """One of the three committed VP8 LOSSY conformance streams per
     doc (rotating by id mod 3). Unlike the lossless synthesizers there
     is no closed pixel formula for a lossy decode, so the oracle
@@ -187,114 +252,20 @@ def synthesize_webp_lossy_media(df: DataFrame, id_col: str = "doc_id") -> DataFr
     mean per variant. The three streams cover B_PRED-heavy noise,
     16x16-mode + strong-loop-filter gradients, and odd-geometry
     partial edge macroblocks."""
-    gen = _webp_lossy_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
+    return _webp_lossy_streams()[did % 3]
 
 
-def _webp_lossy_media_batches(id_col: str):
-    """Per-batch VP8-lossy synthesis closure — shared staged/fused
-    encode contract (see ``_png_media_batches``)."""
-    import base64
-
-    from sqlpp_spark.ops.vp8codec import CONFORMANCE_STREAMS
-
-    streams = [
-        base64.b64decode(CONFORMANCE_STREAMS[k])
-        for k in ("noise48_q75", "grad64x80_q40", "mixed33x47_q90")
-    ]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(d) for d in pdf[id_col]]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "payload": [streams[d % 3] for d in ids],
-            })
-
-    return gen
-
-
-def synthesize_heif_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _heif(did: int) -> bytes:
     """One of the four committed HEIF-family conformance streams per
     doc (id mod 4: AVIF, AVIF+alpha, HEIC grid, HEIC grid+alpha —
     libheif-encoded, property-verified against libheif itself). Like
     the VP8 lossy twin, the oracle contract is known-answer: coded
     AV1/HEVC payloads have no closed pixel form, but their container
     metadata is exact."""
-    import base64
-
-    from sqlpp_spark.ops.mp4box import HEIF_CONFORMANCE_STREAMS
-
-    streams = [
-        base64.b64decode(HEIF_CONFORMANCE_STREAMS[k])
-        for k in ("avif_rgb", "avif_alpha", "heic_rgb", "heic_alpha")
-    ]
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(d) for d in pdf[id_col]]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "payload": [streams[d % 4] for d in ids],
-            })
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+    return _heif_streams()[did % 4]
 
 
-def heif_metadata(df: DataFrame) -> DataFrame:
-    """Metadata-first HEIF/AVIF parse (ops/mp4box.py heif_info): the
-    pruning surface before the AV1/HEVC decode boundary. Malformed
-    payloads yield decoded=false rows."""
-    schema = (
-        "media_id long, format string, width int, height int, "
-        "bit_depth int, rotation int, has_alpha boolean, codec string, "
-        "n_items int, primary_item_bytes long, decoded boolean"
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sqlpp_spark.ops.mp4box import Mp4BoxError, heif_info
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "format", "width", "height", "bit_depth",
-                "rotation", "has_alpha", "codec", "n_items",
-                "primary_item_bytes", "decoded",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    info = heif_info(b)
-                except Mp4BoxError:
-                    info = None
-                out["media_id"].append(mid)
-                if info is None:
-                    out["format"].append(None)
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["bit_depth"].append(0)
-                    out["rotation"].append(0)
-                    out["has_alpha"].append(False)
-                    out["codec"].append(None)
-                    out["n_items"].append(0)
-                    out["primary_item_bytes"].append(0)
-                    out["decoded"].append(False)
-                else:
-                    for k in ("format", "width", "height", "bit_depth",
-                              "rotation", "has_alpha", "codec",
-                              "n_items", "primary_item_bytes"):
-                        out[k].append(info[k])
-                    out["decoded"].append(True)
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select("media_id", "payload")).mapInPandas(
-        parse, schema
-    )
-
-
-def synthesize_webp_anim_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _webp_anim(did: int) -> bytes:
     """Animated WebP with CLOSED-FORM frames: per doc, nf = 2 + id%4
     full-canvas RGBA frames whose gray value is
     ((x + 3y + id + 7*frame) mod 256) with opaque alpha, VP8L-coded so
@@ -305,36 +276,16 @@ def synthesize_webp_anim_media(df: DataFrame, id_col: str = "doc_id") -> DataFra
 
     from sqlpp_spark.ops import webpcodec as WC
 
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                nf = 2 + did % 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                frames = []
-                for k in range(nf):
-                    g = ((xx + 3 * yy + did + 7 * k) % 256).astype(np.uint8)
-                    frames.append(np.dstack(
-                        [g, g, g, np.full_like(g, 255)]
-                    ))
-                out["media_id"].append(did)
-                out["payload"].append(
-                    WC.encode_webp_animated(frames, duration_ms=33)
-                )
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+    frames = []
+    for k in range(2 + did % 4):
+        g = _formula(did, 7 * k)
+        frames.append(np.dstack([g, g, g, np.full_like(g, 255)]))
+    return WC.encode_webp_animated(frames, duration_ms=33)
 
 
-def synthesize_webp_anim_patch_media(
-    df: DataFrame, id_col: str = "doc_id",
-) -> DataFrame:
+def _webp_anim_patch(did: int) -> bytes:
     """Animated WebP whose per-frame composites DEPEND ON HISTORY —
-    the surface the full-canvas synthesizer above never exercises
+    the surface the full-canvas ``webp_anim`` family never exercises
     (its every frame overwrites the whole canvas, so composite k ==
     frame k regardless of compositing correctness). Per doc: canvas
     W=id%13+8, H=id%11+8, base frame of constant gray b=id%256
@@ -354,286 +305,370 @@ def synthesize_webp_anim_patch_media(
 
     from sqlpp_spark.ops import webpcodec as WC
 
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 8, did % 11 + 8
-                nf = 2 + did % 3
-                b = did % 256
-                base = np.full((h, w, 4), 255, np.uint8)
-                base[..., :3] = b
-                frames, offsets = [base], [(0, 0)]
-                for k in range(1, nf):
-                    g = (did + 41 * k) % 256
-                    a = 255 if did % 2 == 0 else 128
-                    strip = np.full((h, 2, 4), a, np.uint8)
-                    strip[..., :3] = g
-                    frames.append(strip)
-                    offsets.append((2 * (k - 1), 0))
-                out["media_id"].append(did)
-                out["payload"].append(WC.encode_webp_animated(
-                    frames, duration_ms=33, offsets=offsets,
-                    dispose=(did % 2 == 0), blend=(did % 2 == 1),
-                ))
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
-
-
-def synthesize_png_variants_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """CLOSED-FORM pixels through the HARD PNG paths: per doc the
-    formula image ((x + 3y + id) mod 256) is encoded rotating through
-    Adam7 interlacing, palette color (the formula's row-0 values as a
-    256-entry palette — i.e. a palette image whose looked-up gray
-    equals the formula), 16-bit samples (value << 8, so mean_byte is
-    mean*256), and the plain baseline — one corpus exercising
-    deinterlacing, PLTE lookup and 16-bit unpacking with
-    SQL-recomputable decoded stats."""
-    gen = _png_variants_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, variant int, payload binary"
+    w, h = did % 13 + 8, did % 11 + 8
+    base = np.full((h, w, 4), 255, np.uint8)
+    base[..., :3] = did % 256
+    frames, offsets = [base], [(0, 0)]
+    for k in range(1, 2 + did % 3):
+        strip = np.full((h, 2, 4), 255 if did % 2 == 0 else 128, np.uint8)
+        strip[..., :3] = (did + 41 * k) % 256
+        frames.append(strip)
+        offsets.append((2 * (k - 1), 0))
+    return WC.encode_webp_animated(
+        frames, duration_ms=33, offsets=offsets,
+        dispose=(did % 2 == 0), blend=(did % 2 == 1),
     )
 
 
-def _png_variants_media_batches(id_col: str):
-    """Per-batch PNG-variants synthesis closure — shared staged/fused
-    encode contract (see ``_png_media_batches``)."""
-    import numpy as np
-
-    from sqlpp_spark.ops import imagecodec as IC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray_palette = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        for pdf in batches:
-            out = {"media_id": [], "variant": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                variant = did % 4
-                if variant == 0:
-                    payload = IC.encode_png(img, interlace=True)
-                elif variant == 1:
-                    # gray palette: palette index == gray value, so the
-                    # decoded RGB planes all equal the formula
-                    payload = IC.encode_png_palette(
-                        gray_palette[img], interlace=did % 2 == 1
-                    )
-                elif variant == 2:
-                    payload = IC.encode_png(
-                        (img.astype(np.uint16) << 8), interlace=True
-                    )
-                else:
-                    payload = IC.encode_png(img)
-                out["media_id"].append(did)
-                out["variant"].append(variant)
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def synthesize_gif_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _gif(did: int) -> bytes:
     """REAL GIF payloads with CLOSED-FORM pixels: the formula image
     ((x + 3y + id) mod 256) indexed through a gray palette (so every
     decoded RGB channel equals the formula), interlaced on odd ids,
     with a second identical frame on ids % 3 == 0 (first-frame decode
     must ignore it). SQL recomputes geometry and the exact mean."""
-    gen = _gif_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
+    from sqlpp_spark.ops import gifcodec as GC
+
+    return GC.encode_gif(
+        _gray_palette()[_formula(did)], interlace=did % 2 == 1,
+        loop_frames=2 if did % 3 == 0 else 1,
     )
 
 
-def _gif_media_batches(id_col: str):
-    """Per-batch GIF synthesis closure — shared staged/fused encode
-    contract (see ``_png_media_batches``)."""
-    import numpy as np
-
-    from sqlpp_spark.ops import gifcodec as GC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = gray[((xx + 3 * yy + did) % 256)]
-                out["media_id"].append(did)
-                out["payload"].append(
-                    GC.encode_gif(
-                        img, interlace=did % 2 == 1,
-                        loop_frames=2 if did % 3 == 0 else 1,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def synthesize_bmp_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _bmp(did: int) -> bytes:
     """REAL BMP payloads with CLOSED-FORM pixels — the formula image
     through a gray palette, rotating 8-bit plain / 8-bit RLE8 /
     24-bit / top-down variants by id, all decoding to the same
     SQL-recomputable stats."""
-    gen = _bmp_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
-
-
-def _bmp_media_batches(id_col: str):
-    """Per-batch BMP synthesis closure — shared staged/fused encode
-    contract (see ``_png_media_batches``)."""
-    import numpy as np
-
     from sqlpp_spark.ops import bmpcodec as BC
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                idx = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                variant = did % 4
-                if variant == 0:
-                    payload = BC.encode_bmp(idx, palette=gray)
-                elif variant == 1:
-                    payload = BC.encode_bmp(idx, palette=gray, rle=True)
-                elif variant == 2:
-                    payload = BC.encode_bmp(gray[idx])
-                else:
-                    payload = BC.encode_bmp(gray[idx], top_down=True)
-                out["media_id"].append(did)
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return gen
+    gray, idx = _gray_palette(), _formula(did)
+    variant = did % 4
+    if variant == 0:
+        return BC.encode_bmp(idx, palette=gray)
+    if variant == 1:
+        return BC.encode_bmp(idx, palette=gray, rle=True)
+    if variant == 2:
+        return BC.encode_bmp(gray[idx])
+    return BC.encode_bmp(gray[idx], top_down=True)
 
 
-def synthesize_tiff_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _tiff(did: int) -> bytes:
     """REAL TIFF payloads with CLOSED-FORM pixels — formula grayscale
     rotating through uncompressed / TIFF-LZW / PackBits compression,
     II / MM byte orders and multi-strip layouts by id."""
-    gen = _tiff_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
+    from sqlpp_spark.ops import tiffcodec as TC
+
+    return TC.encode_tiff(
+        _formula(did),
+        compression=(1, 5, 32773)[did % 3],
+        byte_order="II" if did % 2 == 0 else "MM",
+        rows_per_strip=3 + did % 5,
     )
 
 
-def _tiff_media_batches(id_col: str):
-    """Per-batch TIFF synthesis closure — shared staged/fused encode
-    contract (see ``_png_media_batches``)."""
-    import numpy as np
-
-    from sqlpp_spark.ops import tiffcodec as TC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        comps = (1, 5, 32773)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                out["media_id"].append(did)
-                out["payload"].append(
-                    TC.encode_tiff(
-                        img,
-                        compression=comps[did % 3],
-                        byte_order="II" if did % 2 == 0 else "MM",
-                        rows_per_strip=3 + did % 5,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def synthesize_video_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _video(did: int) -> bytes:
     """REAL video-modality payloads: animated GIFs whose frame f has
     CLOSED-FORM pixels ((x + 3y + id + 7f) mod 256 through a gray
     palette), 2 + id%4 frames each, interlaced on odd ids — so frame
     EXTRACTION (not just metadata sampling) is SQL-verifiable."""
-    import numpy as np
-
     from sqlpp_spark.ops import gifcodec as GC
 
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                frames = [
-                    gray[((xx + 3 * yy + did + 7 * f) % 256)]
-                    for f in range(2 + did % 4)
-                ]
-                out["media_id"].append(did)
-                out["payload"].append(
-                    GC.encode_gif_animated(frames, interlace=did % 2 == 1)
-                )
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+    frames = [
+        _gray_palette()[_formula(did, 7 * f)] for f in range(2 + did % 4)
+    ]
+    return GC.encode_gif_animated(frames, interlace=did % 2 == 1)
 
 
-FRAME_SCHEMA = (
-    "media_id long, frame_idx int, width int, height int, "
-    "mean_byte double, decoded boolean"
-)
+def _tile_image(v):
+    """A 9x8 tile-value grid upscaled to 2x2 constant tiles (18x16 px)."""
+    import numpy as np
+
+    return np.kron(v, np.ones((2, 2), np.int64)).astype(np.uint8)
 
 
-def synthesize_tile_media(
-    df: DataFrame, id_col: str = "doc_id", near_dups: bool = False,
-) -> DataFrame:
+def _tile(did: int) -> bytes:
     """Tiled grayscale PNGs whose dHash is CLOSED-FORM: the image is
     a 9x8 grid of 2x2 constant tiles (18x16 px), tile (cx, cy) value
-    (7*base + 17*cx + 29*cy) % 256 — block averages equal tile
-    values, so the oracle recomputes the exact 64-bit hash in SQL.
-    ``near_dups``: base = id // 4 (4-member groups share an image)
-    and members with id % 4 != 0 invert ONE tile
-    (cy = id*5 % 8, cx = id*3 % 9) to 255 - v — deterministic
-    hamming-close clusters (<= 2 bits vs base, <= 4 within group)."""
+    (7*id + 17*cx + 29*cy) % 256 — block averages equal tile values,
+    so the oracle recomputes the exact 64-bit hash in SQL."""
+    from sqlpp_spark.ops import imagecodec as IC
+
+    cy, cx = _tile_grid()
+    return IC.encode_png(
+        _tile_image((7 * did + 17 * cx + 29 * cy) % 256), level=1
+    )
+
+
+def _tile_near_dups(did: int) -> bytes:
+    """The ``tile`` family in hamming-close clusters: base = id // 4
+    (4-member groups share an image) replaces id in the tile formula,
+    and members with id % 4 != 0 invert ONE tile (cy = id*5 % 8,
+    cx = id*3 % 9) to 255 - v — deterministic clusters (<= 2 bits vs
+    base, <= 4 within group)."""
+    from sqlpp_spark.ops import imagecodec as IC
+
+    cy, cx = _tile_grid()
+    v = (7 * (did // 4) + 17 * cx + 29 * cy) % 256
+    if did % 4 != 0:
+        py, px = (did * 5) % 8, (did * 3) % 9
+        v[py, px] = 255 - v[py, px]
+    return IC.encode_png(_tile_image(v), level=1)
+
+
+def _tile_anim(did: int) -> bytes:
+    """Animated WebP whose per-frame dHash is CLOSED-FORM: nf =
+    2 + id%3 full-canvas frames, each a 9x8 grid of 2x2 tiles with
+    value (7*id + 11*k + 17*cx + 29*cy) % 256 (k the frame index) —
+    the video twin of the ``tile`` family."""
+    import numpy as np
+
+    from sqlpp_spark.ops import webpcodec as WC
+
+    cy, cx = _tile_grid()
+    frames = []
+    for k in range(2 + did % 3):
+        g = _tile_image((7 * did + 11 * k + 17 * cx + 29 * cy) % 256)
+        frames.append(np.dstack([g, g, g, np.full_like(g, 255)]))
+    return WC.encode_webp_animated(frames, duration_ms=33)
+
+
+def _audio_tile_clip(did: int, v) -> bytes:
+    """65 block values → 4 PCM16 samples per block, WAV on even ids and
+    FLAC on odd ids."""
+    import numpy as np
+
+    from sqlpp_spark.ops.audiocodec import WAVE_PCM, write_wav
+    from sqlpp_spark.ops.flaccodec import encode_flac
+
+    samples = np.repeat(v, 4).astype(np.int16)
+    if did % 2 == 0:
+        return write_wav(samples, 8000, WAVE_PCM)
+    return encode_flac(samples, 8000)
+
+
+def _audio_tile(did: int) -> bytes:
+    """Audio clips whose fingerprint is CLOSED-FORM: 65 blocks of 4
+    constant PCM16 samples, block value (7*id + 37*blk) % 1000 -
+    500, so block energy is exactly 4v². EVEN docs ship as WAV PCM16,
+    ODD docs as FLAC (lossless — identical samples, identical
+    fingerprint), so the oracle entry exercises BOTH decode paths
+    under one codec-agnostic SQL oracle."""
+    import numpy as np
+
+    return _audio_tile_clip(did, (7 * did + 37 * np.arange(65)) % 1000 - 500)
+
+
+def _audio_tile_near_dups(did: int) -> bytes:
+    """The ``audio_tile`` family in hamming-close clusters: base =
+    id//4 replaces id in the block formula, and members id%4 != 0 add
+    +300 to ONE block (blk = id*5 % 65) — deterministic distances."""
+    import numpy as np
+
+    v = (7 * (did // 4) + 37 * np.arange(65)) % 1000 - 500
+    if did % 4 != 0:
+        v[(did * 5) % 65] += 300
+    return _audio_tile_clip(did, v)
+
+
+def _jpeg_lossless(did: int) -> bytes:
+    """REAL lossless-JPEG (SOF3) payloads with CLOSED-FORM pixels —
+    same formula as the ``png`` family ((x + 3y + id) mod 256),
+    encoded with the predictive lossless codec (predictor 1 + id%7).
+    Because SOF3 is bit-exact, the decoded MEAN is SQL-recomputable —
+    full pixel verification for a real JPEG family (lossy DCT JPEGs
+    can only oracle geometry)."""
+    from sqlpp_spark.ops import imagecodec as IC
+
+    return IC.encode_jpeg_lossless(_formula(did), predictor=1 + did % 7)
+
+
+def _jpeg(did: int) -> bytes:
+    """REAL JPEG payloads per doc: a w×h RGB gradient with
+    w = doc_id%13+9, h = doc_id%11+9, encoded by the pure-numpy codec
+    in mapInPandas — coding family by id parity (baseline even,
+    progressive odd), subsampling rotating through 4:2:0/4:2:2/4:4:4
+    by id mod 3, so ONE corpus exercises every decode path the codec
+    ships, including SOF2 spectral selection + successive
+    approximation. JPEG is lossy so the decoded mean is not
+    SQL-recomputable, but the decoded GEOMETRY and the decode-success
+    flag are — a hash-green oracle row proves the corresponding
+    entropy-decode paths run and recover exact dimensions."""
+    from sqlpp_spark.ops import imagecodec as IC
+
+    enc = IC.encode_jpeg_progressive if did % 2 == 1 else IC.encode_jpeg
+    return enc(
+        _gradient_rgb(did), quality=85,
+        subsampling=("420", "422", "444")[did % 3],
+    )
+
+
+def _mp4(did: int) -> bytes:
+    """REAL ISO-BMFF (MP4) container payloads with CLOSED-FORM box
+    content: per doc_id a minimal valid stream (ftyp + mvhd + one avc1
+    video trak + mdat) whose geometry, sample table and keyframe
+    spacing are formulas of the id — so container-metadata extraction
+    (the pruning/planning step before any H.264 decode) is fully
+    SQL-verifiable. Odd ids use the 64-bit (version 1) box forms."""
+    from sqlpp_spark.ops.mp4box import encode_mp4
+
+    return encode_mp4(
+        width=did % 13 + 16, height=did % 11 + 16,
+        n_samples=did % 29 + 2, sample_delta=40,
+        keyframe_every=did % 5 + 1, timescale=1000,
+        version=did % 2,
+    )
+
+
+def _flac(did: int) -> bytes:
+    """FLAC headers with CLOSED-FORM STREAMINFO fields per doc_id:
+    sample rate rotates 8000/16000/22050/44100, channels 1-2, bit
+    depth 16/20/24, total samples (id%97+1)*1000 — so container-
+    metadata extraction is SQL-verifiable (frame decode remains the
+    documented codec boundary, as for MP4/H.264)."""
+    from sqlpp_spark.ops.audiocodec import write_flac_header
+
+    return write_flac_header(
+        sample_rate=(8000, 16000, 22050, 44100)[did % 4],
+        channels=did % 2 + 1,
+        bits_per_sample=(did % 3) * 4 + 16,
+        total_samples=(did % 97 + 1) * 1000,
+    )
+
+
+def _ogg(did: int) -> bytes:
+    """Ogg Opus streams with CLOSED-FORM container content per doc_id
+    (channels, pre-skip, informational rate, frame count — granules
+    cumulative in 48 kHz units, real page CRCs) so metadata extraction
+    is SQL-verifiable; packet payloads are stubs (SILK/CELT frame
+    decode is the documented boundary)."""
+    from sqlpp_spark.ops.oggcodec import encode_ogg_opus
+
+    return encode_ogg_opus(
+        channels=did % 2 + 1,
+        pre_skip=312 + did % 50,
+        input_rate=(8000, 16000, 24000, 48000)[did % 4],
+        n_frames=did % 25 + 1,
+    )
+
+
+def _exif(did: int) -> bytes:
+    """JPEG payloads (real baseline encode of the formula image on a
+    w = id%13+9, h = id%11+9 canvas) carrying CLOSED-FORM EXIF APP1
+    segments: orientation rotates 1-8, camera make cycles 5 values,
+    capture date walks January 2026 — so EXIF extraction (the
+    prune/correct step before decode) is SQL-verifiable."""
     import numpy as np
 
     from sqlpp_spark.ops import imagecodec as IC
+    from sqlpp_spark.ops.exif import build_exif_tiff, insert_exif_app1
 
-    schema = "media_id long, payload binary"
+    img = _formula(did, pad=9)
+    ex = build_exif_tiff(
+        orientation=did % 8 + 1,
+        make=f"Cam{did % 5}",
+        datetime_str=f"2026:01:{did % 28 + 1:02d} 00:00:00",
+        pixel_x=img.shape[1], pixel_y=img.shape[0],
+    )
+    return insert_exif_app1(IC.encode_jpeg(np.stack([img] * 3, axis=-1)), ex)
+
+
+def _mp3(did: int) -> bytes:
+    """MPEG1 Layer III streams with CLOSED-FORM header content per
+    doc_id: bitrate rotates 64/128/192/320, samplerate 44100/48000/
+    32000, frame count 1-40, mono on odd ids, an ID3v2 tag on 4 of 5
+    ids — so the frame walk (sync, tables, lengths, ID3 skip) is
+    SQL-verifiable. Frame payloads are zeroed (decode boundary)."""
+    from sqlpp_spark.ops.mp3box import encode_mp3
+
+    return encode_mp3(
+        n_frames=did % 40 + 1,
+        bitrate_kbps=(64, 128, 192, 320)[did % 4],
+        samplerate=(44100, 48000, 32000)[did % 3],
+        mono=did % 2 == 1,
+        id3_size=(did % 5) * 16,
+    )
+
+
+MEDIA_FAMILIES: dict[str, Callable[[int], bytes]] = {
+    "png": _png,
+    "png_variants": _png_variants,
+    "webp": _webp,
+    "webp_lossy": _webp_lossy,
+    "heif": _heif,
+    "webp_anim": _webp_anim,
+    "webp_anim_patch": _webp_anim_patch,
+    "gif": _gif,
+    "bmp": _bmp,
+    "tiff": _tiff,
+    "video": _video,
+    "tile": _tile,
+    "tile_near_dups": _tile_near_dups,
+    "tile_anim": _tile_anim,
+    "audio_tile": _audio_tile,
+    "audio_tile_near_dups": _audio_tile_near_dups,
+    "jpeg_lossless": _jpeg_lossless,
+    "jpeg": _jpeg,
+    "mp4": _mp4,
+    "flac": _flac,
+    "ogg": _ogg,
+    "exif": _exif,
+    "mp3": _mp3,
+}
+
+
+def _synth_batches(family: str):
+    """Per-batch synthesis closure over ``documents.doc_id``: one
+    (media_id, payload) row per id, encoded by the family's entry in
+    ``MEDIA_FAMILIES``."""
+    if family not in MEDIA_FAMILIES:
+        raise ValueError(f"unknown media family {family!r}")
+    encode = MEDIA_FAMILIES[family]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cy, cx = np.mgrid[0:8, 0:9]
         for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                base = did // 4 if near_dups else did
-                v = (7 * base + 17 * cx + 29 * cy) % 256
-                if near_dups and did % 4 != 0:
-                    py, px = (did * 5) % 8, (did * 3) % 9
-                    v = v.copy()
-                    v[py, px] = 255 - v[py, px]
-                img = np.kron(v, np.ones((2, 2), np.int64)).astype(np.uint8)
-                out["media_id"].append(did)
-                out["payload"].append(IC.encode_png(img, level=1))
-            yield pd.DataFrame(out)
+            ids = [int(d) for d in pdf["doc_id"]]
+            yield pd.DataFrame({
+                "media_id": ids,
+                "payload": [encode(d) for d in ids],
+            })
 
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+    return gen
+
+
+def synthesize(df: DataFrame, family: str) -> DataFrame:
+    """Deterministic encoded media per document: ``df.doc_id`` in,
+    ``media_id long, payload binary`` out, one Arrow-batched
+    mapInPandas stage. ``family`` names an entry of ``MEDIA_FAMILIES``;
+    its encoder's docstring states the payload contract the registry
+    oracle recomputes."""
+    return ensure_parallelism(df.select("doc_id")).mapInPandas(
+        _synth_batches(family), "media_id long, payload binary"
+    )
+
+
+def synthesize_and_decode(df: DataFrame, family: str) -> DataFrame:
+    """FUSED ``decode_image(synthesize(df, family))`` in ONE mapInPandas
+    stage (guide §4.1, §4.3 — the r19 WARC-fusion shape,
+    OPTIMIZATION_r19.md #10/#12). The staged composition runs two
+    chained Python stages with no shuffle between them, so every
+    encoded payload crosses the JVM↔Python Arrow boundary twice for
+    zero replanning benefit. Here the payload is born and decoded
+    inside one Python worker pass: only ``doc_id`` crosses inbound and
+    the small FEATURE_SCHEMA rows cross outbound.
+
+    Row-identity with the staged path is by construction — the same
+    per-batch encode closure and the same per-batch decode body
+    (``_decode_pdf``) composed 1:1 — and is pinned per family by
+    tests/test_multimodal.py::test_fused_synth_decode_identical."""
+    gen = _synth_batches(family)
+
+    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in gen(batches):
+            yield _decode_pdf(pdf, fallback=True)
+
+    return ensure_parallelism(df.select("doc_id")).mapInPandas(
+        fused, FEATURE_SCHEMA
+    )
 
 
 def image_near_duplicates(
@@ -756,42 +791,6 @@ def image_dhash(df: DataFrame) -> DataFrame:
     return ensure_parallelism(
         df.select("media_id", "payload")
     ).mapInPandas(run, schema)
-
-
-def synthesize_tile_anim_media(
-    df: DataFrame, id_col: str = "doc_id",
-) -> DataFrame:
-    """Animated WebP whose per-frame dHash is CLOSED-FORM: nf =
-    2 + id%3 full-canvas frames, each a 9x8 grid of 2x2 tiles with
-    value (7*id + 11*k + 17*cx + 29*cy) % 256 (k the frame index) —
-    the video twin of synthesize_tile_media."""
-    import numpy as np
-
-    from sqlpp_spark.ops import webpcodec as WC
-
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cy, cx = np.mgrid[0:8, 0:9]
-        up = np.ones((2, 2), np.int64)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                frames = []
-                for k in range(2 + did % 3):
-                    v = (7 * did + 11 * k + 17 * cx + 29 * cy) % 256
-                    g = np.kron(v, up).astype(np.uint8)
-                    frames.append(np.dstack(
-                        [g, g, g, np.full_like(g, 255)]
-                    ))
-                out["media_id"].append(did)
-                out["payload"].append(
-                    WC.encode_webp_animated(frames, duration_ms=33)
-                )
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
 
 
 def video_fingerprint(df: DataFrame) -> DataFrame:
@@ -955,45 +954,10 @@ def audio_near_duplicates(
     return out
 
 
-def synthesize_audio_tile_media(
-    df: DataFrame, id_col: str = "doc_id", near_dups: bool = False,
-) -> DataFrame:
-    """Audio clips whose fingerprint is CLOSED-FORM: 65 blocks of 4
-    constant PCM16 samples, block value (7*base + 37*blk) % 1000 -
-    500, so block energy is exactly 4v². EVEN docs ship as WAV PCM16,
-    ODD docs as FLAC (lossless — identical samples, identical
-    fingerprint), so the oracle entry exercises BOTH decode paths
-    under one codec-agnostic SQL oracle. ``near_dups``: base = id//4
-    and members id%4 != 0 add +300 to ONE block (blk = id*5 % 65) —
-    hamming-close clusters with deterministic distances."""
-    import numpy as np
-
-    from sqlpp_spark.ops.audiocodec import WAVE_PCM, write_wav
-    from sqlpp_spark.ops.flaccodec import encode_flac
-
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        blk = np.arange(65)
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                base = did // 4 if near_dups else did
-                v = (7 * base + 37 * blk) % 1000 - 500
-                if near_dups and did % 4 != 0:
-                    v = v.copy()
-                    v[(did * 5) % 65] += 300
-                samples = np.repeat(v, 4).astype(np.int16)
-                if did % 2 == 0:
-                    payload = write_wav(samples, 8000, WAVE_PCM)
-                else:
-                    payload = encode_flac(samples, 8000)
-                out["media_id"].append(did)
-                out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+FRAME_SCHEMA = (
+    "media_id long, frame_idx int, width int, height int, "
+    "mean_byte double, decoded boolean"
+)
 
 
 def extract_video_frames(
@@ -1064,178 +1028,6 @@ def extract_video_frames(
     )
 
 
-def synthesize_jpeg_lossless_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL lossless-JPEG (SOF3) payloads with CLOSED-FORM pixels —
-    same formula as ``synthesize_png_media`` ((x + 3y + id) mod 256),
-    encoded with the predictive lossless codec. Because SOF3 is
-    bit-exact, the decoded MEAN is SQL-recomputable — full pixel
-    verification for a real JPEG family (lossy DCT JPEGs can only
-    oracle geometry)."""
-    gen = _jpeg_lossless_media_batches(id_col)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        gen, "media_id long, payload binary"
-    )
-
-
-def _jpeg_lossless_media_batches(id_col: str):
-    """Per-batch lossless-JPEG synthesis closure — shared staged/fused
-    encode contract (see ``_png_media_batches``)."""
-    import numpy as np
-
-    from sqlpp_spark.ops import imagecodec as IC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 4, did % 11 + 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                out["media_id"].append(did)
-                out["payload"].append(
-                    IC.encode_jpeg_lossless(img, predictor=1 + did % 7)
-                )
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def synthesize_jpeg_media(
-    df: DataFrame, id_col: str = "doc_id", family: str = "mixed",
-) -> DataFrame:
-    """REAL JPEG payloads per doc: a w×h RGB gradient with
-    w = doc_id%13+9, h = doc_id%11+9, encoded by the pure-numpy codec
-    in mapInPandas. ``family``: "baseline", "progressive", or "mixed"
-    (default — coding family by id parity, subsampling rotating
-    through 4:2:0/4:2:2/4:4:4 by id mod 3, so ONE corpus exercises
-    every decode path the codec ships, including SOF2 spectral
-    selection + successive approximation). JPEG is lossy so the
-    decoded mean is not SQL-recomputable, but the decoded GEOMETRY and
-    the decode-success flag are — a hash-green oracle row proves the
-    corresponding entropy-decode paths run and recover exact
-    dimensions."""
-    if family not in ("baseline", "progressive", "mixed"):
-        raise ValueError(f"unknown JPEG family {family!r}")
-    schema = "media_id long, payload binary"
-    gen = _jpeg_media_batches(id_col, family)
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
-
-
-def _jpeg_media_batches(id_col: str, family: str):
-    """Per-batch JPEG synthesis closure shared by the staged
-    (``synthesize_jpeg_media``) and fused
-    (``synthesize_and_decode_jpeg_media``) paths — the single encode
-    contract is what makes the two paths row-identical by
-    construction (the WARC-fusion argument, OPTIMIZATION_r19.md #10)."""
-    import numpy as np
-
-    from sqlpp_spark.ops import imagecodec as IC
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        subs = ("420", "422", "444")
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 9, did % 11 + 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        (xx * 255 // max(w - 1, 1)),
-                        (yy * 255 // max(h - 1, 1)),
-                        ((xx + yy + did) % 256),
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                prog = family == "progressive" or (
-                    family == "mixed" and did % 2 == 1
-                )
-                sub = subs[did % 3] if family == "mixed" else "420"
-                enc = IC.encode_jpeg_progressive if prog else IC.encode_jpeg
-                out["media_id"].append(did)
-                out["payload"].append(enc(img, quality=85, subsampling=sub))
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def synthesize_and_decode_jpeg_media(
-    df: DataFrame, id_col: str = "doc_id", family: str = "mixed",
-    fallback: bool = True,
-) -> DataFrame:
-    """FUSED synthesize→decode in ONE mapInPandas stage (guide §4.1,
-    §4.3 — the r19 WARC-fusion shape applied to the JPEG oracle row):
-    the staged composition ``decode_image(synthesize_jpeg_media(df))``
-    runs two chained Python stages with no shuffle between them, so
-    every encoded payload crosses the JVM↔Python Arrow boundary twice
-    (out of the encoder stage, back into the decoder stage) for zero
-    replanning benefit. Here the payload is born and decoded inside
-    one Python worker pass: only ``id_col`` crosses inbound and the
-    small FEATURE_SCHEMA rows cross outbound.
-
-    Row-identity with the staged path is by construction — the
-    per-batch encode closure (``_jpeg_media_batches``) and the
-    per-batch decode body (``_decode_pdf``) are the same objects the
-    staged operators run, composed 1:1 per batch — and is pinned by
-    tests/test_multimodal.py::test_jpeg_fused_synth_decode_identical.
-    """
-    if family not in ("baseline", "progressive", "mixed"):
-        raise ValueError(f"unknown JPEG family {family!r}")
-    gen = _jpeg_media_batches(id_col, family)
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in gen(batches):
-            yield _decode_pdf(pdf, fallback)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        fused, FEATURE_SCHEMA
-    )
-
-
-def synthesize_and_decode_media(
-    df: DataFrame, family: str, id_col: str = "doc_id",
-    fallback: bool = True,
-) -> DataFrame:
-    """FUSED synthesize→decode in ONE mapInPandas stage for the
-    non-JPEG media families (guide §4.1, §4.3 — the r19 WARC/JPEG
-    fusion shape, OPTIMIZATION_r19.md #10/#12, applied to every
-    remaining ``decode_image(synthesize_X_media(df))`` registry row):
-    the staged composition runs two chained Python stages with no
-    shuffle between them, so every encoded payload crosses the
-    JVM↔Python Arrow boundary twice for zero replanning benefit. Here
-    the payload is born and decoded inside one Python worker pass —
-    only ``id_col`` crosses inbound and the small FEATURE_SCHEMA rows
-    cross outbound.
-
-    Row-identity with the staged path is by construction: the
-    per-batch encode closure (``_<family>_media_batches``) and the
-    per-batch decode body (``_decode_pdf``) are the same objects the
-    staged operators run, composed 1:1 per batch — pinned per family
-    by tests/test_multimodal.py::test_fused_synth_decode_identical."""
-    factories = {
-        "png": _png_media_batches,
-        "png_variants": _png_variants_media_batches,
-        "webp": _webp_media_batches,
-        "webp_lossy": _webp_lossy_media_batches,
-        "gif": _gif_media_batches,
-        "bmp": _bmp_media_batches,
-        "tiff": _tiff_media_batches,
-        "jpeg_lossless": _jpeg_lossless_media_batches,
-    }
-    if family not in factories:
-        raise ValueError(f"unknown media family {family!r}")
-    gen = factories[family](id_col)
-
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in gen(batches):
-            yield _decode_pdf(pdf, fallback)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(
-        fused, FEATURE_SCHEMA
-    )
-
-
 def jpeg_arith_equivalence(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per doc: encode the closed-form gradient image BOTH as an
     arithmetic-coded JPEG (SOF9, T.81 Annexes D & F) and as the
@@ -1261,16 +1053,7 @@ def jpeg_arith_equivalence(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                    ("media_id", "width", "height", "identical", "decoded")}
             for did in pdf[id_col]:
                 did = int(did)
-                w, h = did % 13 + 9, did % 11 + 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        (xx * 255 // max(w - 1, 1)),
-                        (yy * 255 // max(h - 1, 1)),
-                        ((xx + yy + did) % 256),
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
+                img = _gradient_rgb(did)
                 sub = subs[did % 3]
                 rst = 3 if did % 5 == 0 else 0  # restart-marker path too
                 try:
@@ -1441,9 +1224,9 @@ def _decode_one(b: bytes, fallback: bool):
 
 
 def decode_image(df: DataFrame, fallback: bool = True) -> DataFrame:
-    """REAL decoder path inside the same Arrow-batched mapInPandas shape
-    as ``fake_decode`` — (media_id, payload) in, FEATURE_SCHEMA out,
-    one pandas batch per Arrow record batch. Per-payload dispatch:
+    """REAL decoder path in the Arrow-batched mapInPandas shape —
+    (media_id, payload) in, FEATURE_SCHEMA out, one pandas batch per
+    Arrow record batch. Per-payload dispatch:
 
     - SYNM synthetic header → parsed directly (mixed corpora work)
     - PNG → pure-numpy codec (ops/imagecodec.py): real pixels, real
@@ -1469,8 +1252,8 @@ def decode_image(df: DataFrame, fallback: bool = True) -> DataFrame:
 
 def _decode_pdf(pdf: pd.DataFrame, fallback: bool) -> pd.DataFrame:
     """Per-batch decode body shared by ``decode_image`` and the fused
-    ``synthesize_and_decode_jpeg_media`` — one decode contract, so the
-    fused and staged plans are row-identical by construction."""
+    ``synthesize_and_decode`` — one decode contract, so the fused and
+    staged plans are row-identical by construction."""
     out = {
         "media_id": [], "width": [], "height": [], "channels": [],
         "payload_bytes": [], "mean_byte": [], "decoded": [],
@@ -1486,44 +1269,6 @@ def _decode_pdf(pdf: pd.DataFrame, fallback: bool) -> pd.DataFrame:
         out["mean_byte"].append(mean)
         out["decoded"].append(dec)
     return pd.DataFrame(out)
-
-
-def fake_decode(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
-    """Deterministic decode/feature-extract over binary payloads via
-    mapInPandas: parses the SYNM header and computes byte statistics —
-    the exact batch shape a real (PIL/ffmpeg) decoder would use."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "channels": [],
-                "payload_bytes": [], "mean_byte": [], "decoded": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                if len(b) >= 9 and b[:4] == _MAGIC:
-                    w, h = struct.unpack(">HH", b[4:8])
-                    ch = b[8]
-                    body = np.frombuffer(b, dtype=np.uint8)[9:]
-                    dec = True
-                else:
-                    w = h = ch = 0
-                    body = np.frombuffer(b, dtype=np.uint8)
-                    dec = False
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["payload_bytes"].append(len(b))
-                out["mean_byte"].append(float(body.mean()) if body.size else 0.0)
-                out["decoded"].append(dec)
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select("media_id", "payload")).mapInPandas(
-        decode_batches, FEATURE_SCHEMA
-    )
 
 
 RESIZED_SCHEMA = (
@@ -1552,7 +1297,7 @@ def resize_images(
     PNG; SYNM payloads rewrite their header geometry (they carry no
     pixels by construction); anything else goes through PIL when
     importable, else passes through with ``resized=false``.
-    scale_x/scale_y = original/target, matching ``resize_stub``.
+    scale_x/scale_y = original/target.
     """
 
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1661,19 +1406,6 @@ def resize_images(
     )
 
 
-def resize_stub(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Metadata-only resize PLAN (no pixel movement): new dims + scale
-    factors on the metadata columns. Use before decode to prune by
-    target geometry; ``resize_images`` is the real pixel path."""
-    return df.withColumn(
-        "resize_scale_x", F.col("width").cast("double") / F.lit(float(target_w))
-    ).withColumn(
-        "resize_scale_y", F.col("height").cast("double") / F.lit(float(target_h))
-    ).withColumn("width", F.lit(target_w).cast("int")).withColumn(
-        "height", F.lit(target_h).cast("int")
-    )
-
-
 def frame_sample_indices(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling plan: explode the frame indices a decoder
     would extract (metadata-only, pre-decode pruning)."""
@@ -1745,7 +1477,7 @@ def synthesize_wave_formula(
     energy (exact int64 sum of squares) and zero-crossing count
     bit-for-bit. The sine corpus (``synthesize_audio``) stays the
     realistic path; this is the oracle-able one — same trick as
-    ``synthesize_png_media`` for images."""
+    the ``png`` media family for images."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -1962,7 +1694,7 @@ def _req_str(v):
 def _metadata_extractor(df: DataFrame, schema: str, fields, parse_row,
                         error_cls) -> DataFrame:
     """One mapInPandas extractor shared by every container-metadata
-    operator (MP4/FLAC/Ogg/EXIF): ``parse_row(bytes) -> dict`` does
+    operator (HEIF/MP4/FLAC/Ogg/EXIF/MP3): ``parse_row(bytes) -> dict`` does
     the format work; ``fields`` is an ordered list of
     ``(name, default, coerce)``. A parse failure (``error_cls``) OR a
     wrongly-TYPED parsed value (coerce raises — e.g. an EXIF
@@ -1999,36 +1731,49 @@ def _metadata_extractor(df: DataFrame, schema: str, fields, parse_row,
 
 
 # ---------------------------------------------------------------------------
-# MP4 container metadata (ISO 14496-12 — ops/mp4box.py)
+# HEIF/AVIF container metadata (ISO 23008-12 — ops/mp4box.py heif_info)
 # ---------------------------------------------------------------------------
 
 
-def synthesize_mp4_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL ISO-BMFF (MP4) container payloads with CLOSED-FORM box
-    content: per doc_id a minimal valid stream (ftyp + mvhd + one avc1
-    video trak + mdat) whose geometry, sample table and keyframe
-    spacing are formulas of the id — so container-metadata extraction
-    (the pruning/planning step before any H.264 decode) is fully
-    SQL-verifiable. Odd ids use the 64-bit (version 1) box forms."""
-    from sqlpp_spark.ops.mp4box import encode_mp4
+def _req_bool(v):
+    if not isinstance(v, bool):
+        raise TypeError(f"expected bool, got {type(v).__name__}")
+    return v
 
-    schema = "media_id long, payload binary"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                out["media_id"].append(did)
-                out["payload"].append(encode_mp4(
-                    width=did % 13 + 16, height=did % 11 + 16,
-                    n_samples=did % 29 + 2, sample_delta=40,
-                    keyframe_every=did % 5 + 1, timescale=1000,
-                    version=did % 2,
-                ))
-            yield pd.DataFrame(out)
+def _opt_str(v):
+    return None if v is None else _req_str(v)
 
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
+
+HEIF_META_SCHEMA = (
+    "media_id long, format string, width int, height int, "
+    "bit_depth int, rotation int, has_alpha boolean, codec string, "
+    "n_items int, primary_item_bytes long, decoded boolean"
+)
+
+
+def heif_metadata(df: DataFrame) -> DataFrame:
+    """Metadata-first HEIF/AVIF parse (ops/mp4box.py heif_info): the
+    pruning surface before the AV1/HEVC decode boundary. Malformed
+    payloads — or wrongly-TYPED parsed values — yield decoded=false
+    rows; ``codec`` is NULL on a parsed file whose primary item has no
+    AV1/HEVC coding."""
+    from sqlpp_spark.ops.mp4box import Mp4BoxError, heif_info
+
+    fields = [
+        ("format", None, _req_str), ("width", 0, _req_int),
+        ("height", 0, _req_int), ("bit_depth", 0, _req_int),
+        ("rotation", 0, _req_int), ("has_alpha", False, _req_bool),
+        ("codec", None, _opt_str), ("n_items", 0, _req_int),
+        ("primary_item_bytes", 0, _req_int),
+    ]
+    return _metadata_extractor(df, HEIF_META_SCHEMA, fields, heif_info,
+                               Mp4BoxError)
+
+
+# ---------------------------------------------------------------------------
+# MP4 container metadata (ISO 14496-12 — ops/mp4box.py)
+# ---------------------------------------------------------------------------
 
 
 MP4_META_SCHEMA = (
@@ -2116,34 +1861,6 @@ def mp4_keyframe_plan(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # FLAC container metadata (ops/audiocodec.py flac_streaminfo)
 # ---------------------------------------------------------------------------
-
-
-def synthesize_flac_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """FLAC headers with CLOSED-FORM STREAMINFO fields per doc_id:
-    sample rate rotates 8000/16000/22050/44100, channels 1-2, bit
-    depth 16/20/24, total samples (id%97+1)*1000 — so container-
-    metadata extraction is SQL-verifiable (frame decode remains the
-    documented codec boundary, as for MP4/H.264)."""
-    from sqlpp_spark.ops.audiocodec import write_flac_header
-
-    schema = "media_id long, payload binary"
-    rates = (8000, 16000, 22050, 44100)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                out["media_id"].append(did)
-                out["payload"].append(write_flac_header(
-                    sample_rate=rates[did % 4],
-                    channels=did % 2 + 1,
-                    bits_per_sample=(did % 3) * 4 + 16,
-                    total_samples=(did % 97 + 1) * 1000,
-                ))
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
 
 
 def synthesize_flac_formula(
@@ -2238,34 +1955,6 @@ def flac_metadata(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def synthesize_ogg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Ogg Opus streams with CLOSED-FORM container content per doc_id
-    (channels, pre-skip, informational rate, frame count — granules
-    cumulative in 48 kHz units, real page CRCs) so metadata extraction
-    is SQL-verifiable; packet payloads are stubs (SILK/CELT frame
-    decode is the documented boundary)."""
-    from sqlpp_spark.ops.oggcodec import encode_ogg_opus
-
-    schema = "media_id long, payload binary"
-    rates = (8000, 16000, 24000, 48000)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                out["media_id"].append(did)
-                out["payload"].append(encode_ogg_opus(
-                    channels=did % 2 + 1,
-                    pre_skip=312 + did % 50,
-                    input_rate=rates[did % 4],
-                    n_frames=did % 25 + 1,
-                ))
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
-
-
 OGG_META_SCHEMA = (
     "media_id long, channels int, pre_skip int, input_sample_rate long, "
     "n_pages long, duration_ms long, decoded boolean"
@@ -2299,41 +1988,6 @@ def ogg_metadata(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # EXIF metadata (ops/exif.py)
 # ---------------------------------------------------------------------------
-
-
-def synthesize_exif_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """JPEG payloads (real baseline encode of the formula image)
-    carrying CLOSED-FORM EXIF APP1 segments: orientation rotates 1-8,
-    camera make cycles 5 values, capture date walks January 2026 —
-    so EXIF extraction (the prune/correct step before decode) is
-    SQL-verifiable."""
-    import numpy as np
-
-    from sqlpp_spark.ops import imagecodec as IC
-    from sqlpp_spark.ops.exif import build_exif_tiff, insert_exif_app1
-
-    schema = "media_id long, payload binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = did % 13 + 9, did % 11 + 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = ((xx + 3 * yy + did) % 256).astype(np.uint8)
-                jpg = IC.encode_jpeg(np.stack([img] * 3, axis=-1))
-                ex = build_exif_tiff(
-                    orientation=did % 8 + 1,
-                    make=f"Cam{did % 5}",
-                    datetime_str=f"2026:01:{did % 28 + 1:02d} 00:00:00",
-                    pixel_x=w, pixel_y=h,
-                )
-                out["media_id"].append(did)
-                out["payload"].append(insert_exif_app1(jpg, ex))
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
 
 
 EXIF_META_SCHEMA = (
@@ -2375,36 +2029,6 @@ def image_exif(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MP3 frame-header metadata (ops/mp3box.py)
 # ---------------------------------------------------------------------------
-
-
-def synthesize_mp3_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """MPEG1 Layer III streams with CLOSED-FORM header content per
-    doc_id: bitrate rotates 64/128/192/320, samplerate 44100/48000/
-    32000, frame count 1-40, mono on odd ids, an ID3v2 tag on 4 of 5
-    ids — so the frame walk (sync, tables, lengths, ID3 skip) is
-    SQL-verifiable. Frame payloads are zeroed (decode boundary)."""
-    from sqlpp_spark.ops.mp3box import encode_mp3
-
-    schema = "media_id long, payload binary"
-    rates = (44100, 48000, 32000)
-    brs = (64, 128, 192, 320)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf[id_col]:
-                did = int(did)
-                out["media_id"].append(did)
-                out["payload"].append(encode_mp3(
-                    n_frames=did % 40 + 1,
-                    bitrate_kbps=brs[did % 4],
-                    samplerate=rates[did % 3],
-                    mono=did % 2 == 1,
-                    id3_size=(did % 5) * 16,
-                ))
-            yield pd.DataFrame(out)
-
-    return ensure_parallelism(df.select(id_col)).mapInPandas(gen, schema)
 
 
 MP3_META_SCHEMA = (

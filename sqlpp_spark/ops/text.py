@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sqlpp_spark.ops.hashing import hash64, hash64_sql
+from sqlpp_spark.ops.hashing import hash64
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # language heuristic. Real pipelines swap in fastText etc. via a Pandas
@@ -191,10 +191,6 @@ def fingerprint(c: Column) -> Column:
     """64-bit-ish document fingerprint: hash of the normalized text.
     (Rolling/shingled variants live in dedup.py via minhash.)"""
     return hash64(normalize_text(c))
-
-
-def fingerprint_sql(c: str) -> str:
-    return hash64_sql(NORMALIZE_SQL.format(c=c))
 
 
 # -- rolling-hash fingerprint (winnowing-style) ------------------------------

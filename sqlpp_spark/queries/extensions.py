@@ -259,8 +259,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-level — NULLed on both sides). crc32-geometry SYNM corpora
     stay covered by unit tests."""
     from sqlpp_spark.ops.multimodal import (
-        decode_image, synthesize_jpeg_media, synthesize_media,
-        synthesize_png_media,
+        decode_image, synthesize, synthesize_media,
     )
 
     d = table(spark, sf_dir, "documents")
@@ -269,8 +268,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(did % 3 == 0),
         width=(did % 13 + 4), height=(did % 11 + 4),
     ).select("media_id", "payload")
-    png = synthesize_png_media(d.filter(did % 3 == 1))
-    jpg = synthesize_jpeg_media(d.filter(did % 3 == 2))
+    png = synthesize(d.filter(did % 3 == 1), "png")
+    jpg = synthesize(d.filter(did % 3 == 2), "jpeg")
     out = decode_image(synm.unionByName(png).unionByName(jpg))
     mid = F.col("media_id")
     return out.select(
@@ -318,10 +317,10 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     map, so a hash-green row certifies genuine pixel resampling (not
     header rewriting) through the Arrow batch path end to end."""
     from sqlpp_spark.ops.multimodal import (
-        decode_image, resize_images, synthesize_png_media,
+        decode_image, resize_images, synthesize,
     )
 
-    media = synthesize_png_media(table(spark, sf_dir, "documents"))
+    media = synthesize(table(spark, sf_dir, "documents"), "png")
     resized = resize_images(media, 16, 12, method="nearest")
     return decode_image(resized.select("media_id", "payload")).select(
         "media_id", "width", "height", "channels", "mean_byte",
@@ -411,7 +410,7 @@ def multimodal_metadata_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, and DuckDB recomputes the surviving set AND their exact
     pixel means, so a hash-green row checks both the prune semantics
     and that the decode really ran on exactly the pruned corpus."""
-    from sqlpp_spark.ops.multimodal import decode_image, synthesize_png_media
+    from sqlpp_spark.ops.multimodal import decode_image, synthesize
 
     d = table(spark, sf_dir, "documents")
     meta = d.select(
@@ -420,7 +419,7 @@ def multimodal_metadata_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 11 + 4).cast("int").alias("m_height"),
     )
     pruned = meta.filter(F.col("m_width") * F.col("m_height") >= 100)
-    media = synthesize_png_media(d).join(
+    media = synthesize(d, "png").join(
         pruned.select("media_id"), on="media_id", how="left_semi"
     )
     return decode_image(media).select(
@@ -673,13 +672,13 @@ def multimodal_webp_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
     end to end against DuckDB's recomputation from the formula alone.
 
     r19 opt (guide §4.1/§4.3): synth+decode run FUSED in one
-    mapInPandas stage (``synthesize_and_decode_media``) so payloads
+    mapInPandas stage (``synthesize_and_decode``) so payloads
     never cross the Arrow boundary; row-identity with the staged form
     is pinned in tests/test_multimodal.py."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "webp").select(
+    return synthesize_and_decode(d, "webp").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -718,11 +717,11 @@ def multimodal_webp_lossy_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame decode, BT.601 conversion, pixel stats — per document id.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "webp_lossy").select(
+    return synthesize_and_decode(d, "webp_lossy").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -761,11 +760,11 @@ def multimodal_png_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     end — the assurance plain rows-only multimodal entries can't give.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "png").select(
+    return synthesize_and_decode(d, "png").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -796,14 +795,14 @@ def multimodal_jpeg_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
     r19 opt (guide §4.1/§4.3 — OPTIMIZATION_r19.md #12): synth and
     decode run FUSED in one mapInPandas stage, so the JPEG payloads
     never cross the JVM↔Python Arrow boundary (the staged
-    ``decode_image(synthesize_jpeg_media(d))`` shipped every payload
+    ``decode_image(synthesize(d, "jpeg"))`` shipped every payload
     out of the encoder stage and back into the decoder stage);
     row-identity with the staged form is pinned in
-    tests/test_multimodal.py::test_jpeg_fused_synth_decode_identical."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_jpeg_media
+    tests/test_multimodal.py::test_fused_synth_decode_identical."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_jpeg_media(d).select(
+    return synthesize_and_decode(d, "jpeg").select(
         "media_id", "width", "height", "channels",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -950,11 +949,11 @@ def multimodal_jpeg_lossless_oracle(spark: SparkSession, sf_dir: str) -> DataFra
     'lossless JPEG' codec boundary.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "jpeg_lossless").select(
+    return synthesize_and_decode(d, "jpeg_lossless").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1024,11 +1023,11 @@ def multimodal_png_variants_oracle(spark: SparkSession, sf_dir: str) -> DataFram
     deinterlacing, palette lookup and 16-bit unpacking driver-side.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "png_variants").select(
+    return synthesize_and_decode(d, "png_variants").select(
         "media_id",
         (F.col("media_id") % 4).cast("int").alias("variant"),
         "width", "height", "channels", "mean_byte",
@@ -1068,11 +1067,11 @@ def multimodal_gif_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-frame decode must skip.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "gif").select(
+    return synthesize_and_decode(d, "gif").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1108,11 +1107,11 @@ def multimodal_bmp_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     all of them.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "bmp").select(
+    return synthesize_and_decode(d, "bmp").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1148,11 +1147,11 @@ def multimodal_tiff_decode_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
     heights; DuckDB verifies geometry and the exact decoded mean.
 
     r19 opt (guide §4.1/§4.3): fused synth+decode, one mapInPandas
-    stage (``synthesize_and_decode_media``)."""
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+    stage (``synthesize_and_decode``)."""
+    from sqlpp_spark.ops.multimodal import synthesize_and_decode
 
     d = table(spark, sf_dir, "documents")
-    return synthesize_and_decode_media(d, "tiff").select(
+    return synthesize_and_decode(d, "tiff").select(
         "media_id", "width", "height", "channels", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1198,12 +1197,10 @@ def multimodal_webp_anim_frames_oracle(
     VP8X/ANIM/ANMF, no-blend overwrite compositing). DuckDB recomputes
     every frame's geometry and exact four-channel mean (gray frames
     with opaque alpha: (3f + 255)/4)."""
-    from sqlpp_spark.ops.multimodal import (
-        extract_video_frames, synthesize_webp_anim_media,
-    )
+    from sqlpp_spark.ops.multimodal import extract_video_frames, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return extract_video_frames(synthesize_webp_anim_media(d)).select(
+    return extract_video_frames(synthesize(d, "webp_anim")).select(
         "media_id", "frame_idx", "width", "height", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1268,10 +1265,10 @@ def multimodal_image_dhash_oracle(
     recomputes every cell value, every comparison bit, and the exact
     packed 64-bit hash. The decode + hash stage is Arrow-batched
     mapInPandas with zero shuffle."""
-    from sqlpp_spark.ops.multimodal import image_dhash, synthesize_tile_media
+    from sqlpp_spark.ops.multimodal import image_dhash, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return image_dhash(synthesize_tile_media(d)).select(
+    return image_dhash(synthesize(d, "tile")).select(
         "media_id", "dhash_hex",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1301,13 +1298,11 @@ def multimodal_image_neardup_oracle(
     equi-joins — never all-pairs; DuckDB brute-forces every pair's
     hamming from recomputed hashes, so banding completeness (the
     pigeonhole guarantee) is checked against an exhaustive oracle."""
-    from sqlpp_spark.ops.multimodal import (
-        image_near_duplicates, synthesize_tile_media,
-    )
+    from sqlpp_spark.ops.multimodal import image_near_duplicates, synthesize
 
     d = table(spark, sf_dir, "documents")
     return image_near_duplicates(
-        synthesize_tile_media(d, near_dups=True), max_hamming=6
+        synthesize(d, "tile_near_dups"), max_hamming=6
     )
 
 
@@ -1354,12 +1349,10 @@ def multimodal_audio_fingerprint_oracle(
     fingerprint under ONE codec-agnostic SQL oracle (this is the
     first entry that hash-verifies the RFC 9639 FLAC decoder inside a
     pipeline operator rather than a codec-level oracle)."""
-    from sqlpp_spark.ops.multimodal import (
-        audio_fingerprint, synthesize_audio_tile_media,
-    )
+    from sqlpp_spark.ops.multimodal import audio_fingerprint, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return audio_fingerprint(synthesize_audio_tile_media(d)).select(
+    return audio_fingerprint(synthesize(d, "audio_tile")).select(
         "media_id", "afp_hex",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1386,13 +1379,11 @@ def multimodal_audio_neardup_oracle(
     mixed. Spark finds pairs via 7 band equi-joins; DuckDB
     brute-forces every pair from recomputed hashes — pigeonhole
     completeness against an exhaustive oracle, audio edition."""
-    from sqlpp_spark.ops.multimodal import (
-        audio_near_duplicates, synthesize_audio_tile_media,
-    )
+    from sqlpp_spark.ops.multimodal import audio_near_duplicates, synthesize
 
     d = table(spark, sf_dir, "documents")
     return audio_near_duplicates(
-        synthesize_audio_tile_media(d, near_dups=True), max_hamming=6
+        synthesize(d, "audio_tile_near_dups"), max_hamming=6
     )
 
 
@@ -1447,12 +1438,10 @@ def multimodal_video_fingerprint_oracle(
     frame order and re-digests; the entry therefore hash-verifies the
     ANMF frame decode, the perceptual hash, AND the sequence digest
     together."""
-    from sqlpp_spark.ops.multimodal import (
-        synthesize_tile_anim_media, video_fingerprint,
-    )
+    from sqlpp_spark.ops.multimodal import synthesize, video_fingerprint
 
     d = table(spark, sf_dir, "documents")
-    return video_fingerprint(synthesize_tile_anim_media(d)).select(
+    return video_fingerprint(synthesize(d, "tile_anim")).select(
         "media_id", "n_frames", "video_fp",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1518,12 +1507,10 @@ def multimodal_webp_anim_composite_oracle(
     pipeline runs; DuckDB recomputes every composited frame's exact
     four-channel mean, including the integer blend arithmetic
     v = (128*g + 127*b) // 255."""
-    from sqlpp_spark.ops.multimodal import (
-        extract_video_frames, synthesize_webp_anim_patch_media,
-    )
+    from sqlpp_spark.ops.multimodal import extract_video_frames, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return extract_video_frames(synthesize_webp_anim_patch_media(d)).select(
+    return extract_video_frames(synthesize(d, "webp_anim_patch")).select(
         "media_id", "frame_idx", "width", "height", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1565,12 +1552,10 @@ def multimodal_video_frames_oracle(spark: SparkSession, sf_dir: str) -> DataFram
     recomputes every frame's geometry and exact mean. Upgrades the
     video modality from metadata-only frame planning to verified
     frame decode (MP4/WebM remain the documented ffmpeg boundary)."""
-    from sqlpp_spark.ops.multimodal import (
-        extract_video_frames, synthesize_video_media,
-    )
+    from sqlpp_spark.ops.multimodal import extract_video_frames, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return extract_video_frames(synthesize_video_media(d)).select(
+    return extract_video_frames(synthesize(d, "video")).select(
         "media_id", "frame_idx", "width", "height", "mean_byte",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1609,12 +1594,10 @@ def multimodal_heif_metadata_oracle(
     libheif-encoded conformance streams whose every reported property
     was verified against libheif's own handle API
     (tests/test_heif_interop.py); DuckDB pins them as known answers."""
-    from sqlpp_spark.ops.multimodal import (
-        heif_metadata, synthesize_heif_media,
-    )
+    from sqlpp_spark.ops.multimodal import heif_metadata, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return heif_metadata(synthesize_heif_media(d)).select(
+    return heif_metadata(synthesize(d, "heif")).select(
         "media_id", "format", "width", "height", "bit_depth", "rotation",
         "has_alpha", "codec", "n_items", "primary_item_bytes",
         F.col("decoded").cast("bigint").alias("decoded"),
@@ -1655,10 +1638,10 @@ def multimodal_mp4_metadata_oracle(spark: SparkSession, sf_dir: str) -> DataFram
     bytes from the stsz sum — from the formulas alone. H.264 pixel
     decode stays the documented ffmpeg boundary; this is the pruning/
     planning surface a crawl pipeline needs BEFORE that boundary."""
-    from sqlpp_spark.ops.multimodal import mp4_metadata, synthesize_mp4_media
+    from sqlpp_spark.ops.multimodal import mp4_metadata, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return mp4_metadata(synthesize_mp4_media(d)).select(
+    return mp4_metadata(synthesize(d, "mp4")).select(
         "media_id", "brand", "duration_ms", "n_tracks", "codec",
         "width", "height", "n_samples", "n_keyframes", "sample_bytes",
         F.col("decoded").cast("bigint").alias("decoded"),
@@ -1686,12 +1669,10 @@ def multimodal_mp4_keyframe_plan_oracle(spark: SparkSession, sf_dir: str) -> Dat
     presentation time — the seek list handed to a downstream decoder,
     derived without touching mdat. DuckDB replays the keyframe
     arithmetic (every ke-th sample from 1) per document."""
-    from sqlpp_spark.ops.multimodal import (
-        mp4_keyframe_plan, synthesize_mp4_media,
-    )
+    from sqlpp_spark.ops.multimodal import mp4_keyframe_plan, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return mp4_keyframe_plan(synthesize_mp4_media(d))
+    return mp4_keyframe_plan(synthesize(d, "mp4"))
 
 
 @register(
@@ -1718,10 +1699,10 @@ def multimodal_flac_metadata_oracle(spark: SparkSession, sf_dir: str) -> DataFra
     recomputes every field — incl. the 20/3/5/36-bit packed record and
     floor-division duration — from the formulas. The metadata-first
     audio surface; frame decode stays the documented boundary."""
-    from sqlpp_spark.ops.multimodal import flac_metadata, synthesize_flac_media
+    from sqlpp_spark.ops.multimodal import flac_metadata, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return flac_metadata(synthesize_flac_media(d)).select(
+    return flac_metadata(synthesize(d, "flac")).select(
         "media_id", "sample_rate", "channels", "bits_per_sample",
         "total_samples", "duration_ms",
         F.col("decoded").cast("bigint").alias("decoded"),
@@ -1751,10 +1732,10 @@ def multimodal_ogg_opus_metadata_oracle(spark: SparkSession, sf_dir: str) -> Dat
     frames + BOS + tags, duration = frames × 960/48 ms net of
     pre-skip. Completes the audio-container trio (WAV native, FLAC
     STREAMINFO, Ogg Opus); frame decode stays the codec boundary."""
-    from sqlpp_spark.ops.multimodal import ogg_metadata, synthesize_ogg_media
+    from sqlpp_spark.ops.multimodal import ogg_metadata, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return ogg_metadata(synthesize_ogg_media(d)).select(
+    return ogg_metadata(synthesize(d, "ogg")).select(
         "media_id", "channels", "pre_skip", "input_sample_rate",
         "n_pages", "duration_ms",
         F.col("decoded").cast("bigint").alias("decoded"),
@@ -1783,10 +1764,10 @@ def multimodal_exif_metadata_oracle(spark: SparkSession, sf_dir: str) -> DataFra
     metadata surface real image pipelines gate on BEFORE pixel
     decode; apply_orientation covers the correction transforms (unit-
     tested inverses)."""
-    from sqlpp_spark.ops.multimodal import image_exif, synthesize_exif_media
+    from sqlpp_spark.ops.multimodal import image_exif, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return image_exif(synthesize_exif_media(d)).select(
+    return image_exif(synthesize(d, "exif")).select(
         "media_id", "orientation", "make", "taken_at", "pixel_x", "pixel_y",
         F.col("decoded").cast("bigint").alias("decoded"),
     )
@@ -1826,10 +1807,10 @@ def multimodal_mp3_metadata_oracle(spark: SparkSession, sf_dir: str) -> DataFram
     every field, incl. the integer-exact duration
     (frames × 1152 × 1000 // rate). Frame decode stays the boundary;
     the container quartet (MP4, FLAC, Ogg Opus, MP3) is complete."""
-    from sqlpp_spark.ops.multimodal import mp3_metadata, synthesize_mp3_media
+    from sqlpp_spark.ops.multimodal import mp3_metadata, synthesize
 
     d = table(spark, sf_dir, "documents")
-    return mp3_metadata(synthesize_mp3_media(d)).select(
+    return mp3_metadata(synthesize(d, "mp3")).select(
         "media_id", "bitrate_kbps", "samplerate", "channels", "n_frames",
         "duration_ms", "id3v2_bytes",
         F.col("decoded").cast("bigint").alias("decoded"),

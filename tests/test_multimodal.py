@@ -5,9 +5,7 @@ from pyspark.sql import functions as F
 
 from sqlpp_spark.ops.multimodal import (
     decode_image,
-    fake_decode,
     frame_sample_indices,
-    resize_stub,
     synthesize_media,
 )
 
@@ -24,8 +22,8 @@ def test_media_schema(media):
     assert kinds["media_id"] == "bigint"
 
 
-def test_fake_decode_roundtrips_header(spark, media):
-    feats = fake_decode(media)
+def test_decode_image_roundtrips_synm_header(spark, media):
+    feats = decode_image(media)
     joined = media.join(feats, on="media_id")
     # header width/height must round-trip through the binary payload
     n = joined.count()
@@ -36,20 +34,25 @@ def test_fake_decode_roundtrips_header(spark, media):
     assert mismatched == 0
     assert feats.filter(F.col("channels") != 3).count() == 0
     assert feats.filter(F.col("mean_byte") <= 0).count() == 0
+    assert feats.filter(~F.col("decoded")).count() == 0
 
 
 def test_decode_image_both_environments(spark, media):
     """decode_image works whether or not pillow is installed: SYNM
-    payloads parse as synthetic in both, so output equals fake_decode
-    on this corpus, with decoded=true everywhere."""
-    real = {r.media_id: (r.width, r.height, r.channels, r.payload_bytes,
-                         round(r.mean_byte, 9), r.decoded)
-            for r in decode_image(media).collect()}
-    fake = {r.media_id: (r.width, r.height, r.channels, r.payload_bytes,
-                         round(r.mean_byte, 9), r.decoded)
-            for r in fake_decode(media).collect()}
-    assert real == fake and real
-    assert all(v[-1] for v in real.values())
+    payloads parse as synthetic in both, so every row equals what
+    synthesize_media's own columns say — header geometry, 3 channels,
+    the payload length and the mean of the body bytes after the
+    9-byte header — with decoded=true everywhere."""
+    want = {}
+    for r in media.collect():
+        body = bytes(r.payload)[9:]
+        mean = sum(body) / len(body) if body else 0.0
+        want[r.media_id] = (r.width, r.height, 3, len(r.payload),
+                            round(mean, 9), True)
+    got = {r.media_id: (r.width, r.height, r.channels, r.payload_bytes,
+                        round(r.mean_byte, 9), r.decoded)
+           for r in decode_image(media).collect()}
+    assert got == want and got
 
 
 def test_decode_image_real_png_without_pil(spark):
@@ -215,13 +218,6 @@ def test_resize_images_synm_header_rewrite(media):
     row = resize_images(media.limit(1), 224, 224).collect()[0]
     assert (row.width, row.height, row.resized) == (224, 224, True)
     assert row.resize_scale_x > 0 and bytes(row.payload)[:4] == b"SYNM"
-
-
-def test_resize_metadata(media):
-    r = resize_stub(media, 224, 224)
-    row = r.limit(1).collect()[0]
-    assert row.width == 224 and row.height == 224
-    assert row.resize_scale_x > 0
 
 
 def test_frame_sampling(spark):
@@ -675,11 +671,15 @@ def test_ogg_opus_roundtrip_crc_and_malformed(spark):
     assert not by[2].decoded
 
 
-def test_metadata_extractors_reject_wrongly_typed_values(spark):
+def test_metadata_extractors_reject_wrongly_typed_values(spark, monkeypatch):
     """Round-9 third review: a PARSEABLE payload whose tag values have
     the wrong TIFF type (orientation stored as ASCII, ExifIFD pointer
     as ASCII) must yield a decoded=false row — not poison the typed
-    Arrow batch or raise TypeError through mapInPandas."""
+    Arrow batch or raise TypeError through mapInPandas. The HEIF
+    extractor shares the contract: a junk payload and a parsed value
+    of the wrong type (``has_alpha`` as a string) are decoded=false
+    rows next to a good one."""
+    import base64
     import struct
 
     import pytest as _pytest
@@ -715,6 +715,36 @@ def test_metadata_extractors_reject_wrongly_typed_values(spark):
     by = {r.media_id: r for r in rows}
     assert not by[1].decoded and by[1].orientation == 0
     assert not by[2].decoded
+
+    from sqlpp_spark.ops import mp4box
+    from sqlpp_spark.ops.multimodal import heif_metadata
+
+    good, alpha = (
+        base64.b64decode(mp4box.HEIF_CONFORMANCE_STREAMS[k])
+        for k in ("avif_rgb", "avif_alpha")
+    )
+    real_info = mp4box.heif_info
+
+    def mistyped_info(b):
+        info = real_info(b)
+        if b == alpha:
+            info["has_alpha"] = "yes"
+        return info
+
+    # heif_metadata binds heif_info when it builds the plan, so the
+    # patched parser ships to the Python workers with the closure
+    monkeypatch.setattr(mp4box, "heif_info", mistyped_info)
+    rows = heif_metadata(spark.createDataFrame(
+        [(1, bytearray(good)), (2, bytearray(b"junk" * 8)),
+         (3, bytearray(alpha))],
+        "media_id long, payload binary",
+    )).collect()
+    by = {r.media_id: r for r in rows}
+    assert by[1].decoded and (by[1].format, by[1].codec) == ("avif", "av01")
+    for mid in (2, 3):
+        assert not by[mid].decoded
+        assert (by[mid].format, by[mid].width, by[mid].has_alpha) == (
+            None, 0, False)
 
 
 def test_mp3_frame_walk_and_malformed(spark):
@@ -964,75 +994,30 @@ def test_video_fingerprint_order_sensitive(spark):
     assert not got[4].decoded
 
 
-def test_jpeg_fused_synth_decode_identical(spark, sf_dir):
-    """r19 #12: the FUSED synthesize→decode stage must return exactly
-    the rows of the staged ``decode_image(synthesize_jpeg_media(d))``
-    composition — both paths run the same per-batch encode closure and
-    the same per-batch decode body, composed 1:1 — and its plan must
-    carry ONE MapInPandas node where the staged form chained two (the
-    JPEG payloads never cross the Arrow boundary in the fused shape)."""
-    import contextlib
-    import io
-
-    from sqlpp_spark.ops.multimodal import (
-        synthesize_and_decode_jpeg_media,
-        synthesize_jpeg_media,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fused = synthesize_and_decode_jpeg_media(docs)
-    staged = decode_image(synthesize_jpeg_media(docs))
-    f_rows = sorted(fused.collect(), key=lambda r: r.media_id)
-    s_rows = sorted(staged.collect(), key=lambda r: r.media_id)
-    assert f_rows and f_rows == s_rows
-    assert all(r.decoded for r in f_rows)  # real entropy decode ran
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        # a FRESH frame: an executed one prints initial + final AQE
-        # plans (doubling every node count)
-        synthesize_and_decode_jpeg_media(docs).explain("formatted")
-    # one MapInPandas node = 2 occurrences (header + details); the
-    # staged form prints 4
-    assert buf.getvalue().count("MapInPandas") == 2
+# Every family with a fused registry row.
+_FUSED_FAMILIES = (
+    "bmp", "gif", "jpeg", "jpeg_lossless", "png", "png_variants", "tiff",
+    "webp", "webp_lossy",
+)
 
 
-def test_jpeg_fused_rejects_unknown_family(spark, sf_dir):
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_jpeg_media
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    with pytest.raises(ValueError, match="unknown JPEG family"):
-        synthesize_and_decode_jpeg_media(docs, family="nope")
-
-
-_FUSED_FAMILIES = {
-    "png": "synthesize_png_media",
-    "png_variants": "synthesize_png_variants_media",
-    "webp": "synthesize_webp_media",
-    "webp_lossy": "synthesize_webp_lossy_media",
-    "gif": "synthesize_gif_media",
-    "bmp": "synthesize_bmp_media",
-    "tiff": "synthesize_tiff_media",
-    "jpeg_lossless": "synthesize_jpeg_lossless_media",
-}
-
-
-@pytest.mark.parametrize("family", sorted(_FUSED_FAMILIES))
+@pytest.mark.parametrize("family", _FUSED_FAMILIES)
 def test_fused_synth_decode_identical(spark, sf_dir, family):
-    """r19 #13 (the #12 JPEG shape generalized): for every remaining
-    ``decode_image(synthesize_X_media(d))`` registry row, the FUSED
-    single-stage operator must return exactly the staged composition's
-    rows — both paths run the same per-batch encode closure
-    (``_<family>_media_batches``) and the same per-batch decode body
+    """The FUSED single-stage ``synthesize_and_decode`` must return
+    exactly the rows of the staged
+    ``decode_image(synthesize(d, family))`` composition — both run the
+    same per-batch encode closure and the same per-batch decode body
     (``_decode_pdf``), composed 1:1 — and its plan must carry ONE
-    MapInPandas node where the staged form chained two."""
+    MapInPandas node where the staged form chains two (the payloads
+    never cross the Arrow boundary in the fused shape)."""
     import contextlib
     import io
 
-    from sqlpp_spark.ops import multimodal as MM
+    from sqlpp_spark.ops.multimodal import synthesize, synthesize_and_decode
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fused = MM.synthesize_and_decode_media(docs, family)
-    staged = decode_image(getattr(MM, _FUSED_FAMILIES[family])(docs))
+    fused = synthesize_and_decode(docs, family)
+    staged = decode_image(synthesize(docs, family))
     f_rows = sorted(fused.collect(), key=lambda r: r.media_id)
     s_rows = sorted(staged.collect(), key=lambda r: r.media_id)
     assert f_rows and f_rows == s_rows
@@ -1041,15 +1026,16 @@ def test_fused_synth_decode_identical(spark, sf_dir, family):
     with contextlib.redirect_stdout(buf):
         # a FRESH frame: an executed one prints initial + final AQE
         # plans (doubling every node count)
-        MM.synthesize_and_decode_media(docs, family).explain("formatted")
+        synthesize_and_decode(docs, family).explain("formatted")
     # one MapInPandas node = 2 occurrences (header + details); the
     # staged form prints 4
     assert buf.getvalue().count("MapInPandas") == 2
 
 
-def test_fused_media_rejects_unknown_family(spark, sf_dir):
-    from sqlpp_spark.ops.multimodal import synthesize_and_decode_media
+def test_unknown_media_family_rejected(spark, sf_dir):
+    from sqlpp_spark.ops.multimodal import synthesize, synthesize_and_decode
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    with pytest.raises(ValueError, match="unknown media family"):
-        synthesize_and_decode_media(docs, "nope")
+    for entry in (synthesize, synthesize_and_decode):
+        with pytest.raises(ValueError, match="unknown media family"):
+            entry(docs, "nope")

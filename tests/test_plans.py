@@ -403,11 +403,11 @@ def test_multimodal_decode_stage_parallelism(spark, sf_dir):
     ensure_parallelism guards every multimodal mapInPandas entry. A
     1-partition Python decode stage on a 32-core executor — or a
     1000-executor cluster — silently serializes the corpus."""
-    from sqlpp_spark.ops.multimodal import synthesize_png_media
+    from sqlpp_spark.ops.multimodal import synthesize
     from sqlpp_spark.sources.tables import read_table
 
     d = read_table(spark, sf_dir, "documents")
-    media = synthesize_png_media(d)
+    media = synthesize(d, "png")
     target = spark.sparkContext.defaultParallelism
     assert media.rdd.getNumPartitions() >= min(target, d.count())
 

@@ -308,11 +308,11 @@ def test_version_and_signature_rejected():
 
 
 def test_decode_image_handles_webp(spark, sf_dir):
-    from sqlpp_spark.ops.multimodal import decode_image, synthesize_webp_media
+    from sqlpp_spark.ops.multimodal import decode_image, synthesize
     from sqlpp_spark.queries import table
 
     d = table(spark, sf_dir, "documents").limit(24)
-    rows = decode_image(synthesize_webp_media(d)).collect()
+    rows = decode_image(synthesize(d, "webp")).collect()
     assert rows
     for r in rows:
         assert r.decoded, r
