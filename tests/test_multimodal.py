@@ -1032,10 +1032,21 @@ def test_fused_synth_decode_identical(spark, sf_dir, family):
     assert buf.getvalue().count("MapInPandas") == 2
 
 
-def test_unknown_media_family_rejected(spark, sf_dir):
+def test_fused_media_rejects_unknown_family(spark, sf_dir):
     from sqlpp_spark.ops.multimodal import synthesize, synthesize_and_decode
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for entry in (synthesize, synthesize_and_decode):
         with pytest.raises(ValueError, match="unknown media family"):
             entry(docs, "nope")
+
+
+def test_jpeg_fused_rejects_unknown_family(spark, sf_dir):
+    """JPEG variants are plain MEDIA_FAMILIES keys: a JPEG-looking name
+    that is not one is rejected like any other unknown family."""
+    from sqlpp_spark.ops.multimodal import synthesize, synthesize_and_decode
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for entry in (synthesize, synthesize_and_decode):
+        with pytest.raises(ValueError, match="unknown media family"):
+            entry(docs, "jpeg_nope")
