@@ -59,6 +59,14 @@ def spark_type(ty: Optional[Ty]) -> str:
     return SPARK_TYPES[ty.kind]
 
 
+def not_terminated(max_iter, names: str = "") -> SqlppError:
+    cte = f"recursive CTE {names!r}" if names else "a recursive CTE"
+    return SqlppError(
+        f"{cte} did not terminate within {max_iter} iterations "
+        "(set spark.sqlpp.recursive.maxIterations to raise)"
+    )
+
+
 class Bindings:
     """Bound parameter values for one execution."""
 
@@ -101,51 +109,48 @@ class Compiler:
     # -- WITH RECURSIVE (r17) ------------------------------------------------
 
     def _compile_recursive(self, q: QueryInfo, binds: Bindings) -> DataFrame:
-        """WITH RECURSIVE via bounded supersteps — the same iterative
-        shape as the engine's BFS / pagerank (queries/web_queries.py):
-        each iteration compiles the step branch(es) with the recursive
-        name(s) bound to the previous iteration's NEW rows (the
-        standard SQL working table), localCheckpoints the batch to
-        truncate lineage (on a cluster this is executor-local storage;
-        each superstep is one bounded Spark job), and stops when the
-        working tables are empty or after
+        """WITH RECURSIVE, one stratum at a time: strata evaluate in
+        order, and each stratum's bases and every later stratum see
+        earlier strata as completed tables (stratified DuckDB/PG
+        semantics).
+
+        A stratum of one linear UNION ALL member (the generator/chain
+        shape) lowers to Spark's native recursive CTE
+        (``_native_recursive``): one UnionLoop plan, visible to EXPLAIN
+        and AQE and run by the action, so compiling it runs no job.
         ``spark.sqlpp.recursive.maxIterations`` (default 100, a
         non-termination guard DuckDB/PG do not have — an unbounded
-        fixpoint on 100 TB is an outage, not a query).
+        fixpoint on 100 TB is an outage, not a query) becomes its MAX
+        RECURSION LEVEL; Spark raises at execution when it is hit, and
+        the engine's fetch APIs re-raise that as SqlppError.
 
-        UNION (distinct) follows the textbook fixpoint: only globally
-        NEW rows enter the next working table, so cycles terminate.
-        UNION ALL feeds every step row forward and relies on the data
-        being acyclic (plus the iteration cap).
-
-        r18 — multiple members and mutual cycles: strata evaluate in
-        order; each stratum's bases and every LATER stratum see
-        earlier strata as completed tables (stratified DuckDB/PG
-        semantics), while the members of one stratum iterate in
-        TANDEM — every step of iteration i sees every cycle member's
-        iteration-(i-1) frontier, and the stratum terminates when ALL
-        its frontiers are empty in the same iteration. Mutual cycles
-        are UNION-distinct only (parser-enforced). Delta-binding is
-        used only for LINEAR steps (exactly one cycle reference),
-        where it provably equals the accumulated closure: a monotone
-        step linear in its cycle table distributes over the union of
-        deltas. NON-LINEAR steps (r19 — a join of two cycle members,
-        or a mutual partner referenced twice; non-linear SELF-joins
-        are a parse error, as in PG) re-evaluate over the ACCUMULATED
-        results each iteration instead; with the new-rows subtract
-        this is the terminating stratified-closure evaluation — the
-        datalog least fixpoint, pinned as THE semantics (a Hypothesis
-        sweep proved DuckDB's native mutual evaluation is neither the
-        closure nor pure working-table binding in general, and PG
-        rejects mutual recursion outright, so the independent oracle
-        for non-linear shapes is a brute-force fixpoint, not another
-        SQL engine — tests/test_recursive_cte.py).
-
-        Scale shape: per iteration, UNION-distinct costs one distinct
-        exchange over the step output plus one anti-join against the
-        accumulated result; UNION ALL is exchange-free. The final
-        result is a plan-level union of <= maxIterations checkpointed
-        batches."""
+        Every other stratum runs on the driver in bounded supersteps:
+        UNION (distinct; Spark rejects it in a recursive CTE), mutual
+        cycles, non-linear steps, and steps whose recursive reference
+        Spark refuses (in an aggregate, a window, or the outer side of
+        an outer join). Each iteration compiles the step branch(es) with
+        the recursive name(s) bound to the previous iteration's NEW rows
+        (the standard SQL working table), localCheckpoints and counts
+        the batch (one bounded job per member per superstep), and stops
+        when every working table is empty; it raises once the cap is
+        spent with rows still pending. UNION (distinct) feeds only
+        globally new rows forward, so cycles terminate; UNION ALL relies
+        on acyclic data plus the cap. The members of a mutual stratum
+        iterate in TANDEM (every step of iteration i sees every cycle
+        member's iteration-(i-1) frontier) and the stratum ends when
+        ALL its frontiers are empty in the same iteration. LINEAR steps
+        bind deltas, which provably equals the accumulated closure for
+        a monotone step linear in its cycle table. NON-LINEAR steps (a
+        join of two cycle members, or a mutual partner referenced twice;
+        non-linear SELF-joins are a parse error, as in PG) re-evaluate
+        over the ACCUMULATED results instead: with the new-rows subtract
+        this is the datalog least fixpoint, pinned as THE semantics
+        (DuckDB's native mutual evaluation is neither that nor pure
+        working-table binding in general, and PG rejects mutual
+        recursion, so tests/test_recursive_cte.py checks those shapes
+        against a brute-force fixpoint). Per iteration, UNION-distinct
+        costs one distinct exchange plus one anti-join against the
+        accumulated result; UNION ALL is exchange-free."""
         memo_key = getattr(q, "memo_key", None) or id(q)
         memo = self._rec_memo.get(memo_key)
         if memo is not None:
@@ -174,14 +179,16 @@ class Compiler:
         try:
             for stratum in rec.strata:
                 ms = [rec.members[i] for i in stratum]
+                if len(ms) == 1 and ms[0].union_all:
+                    # sees earlier strata as completed tables
+                    self.catalog = {**orig_catalog, **results}
+                    native = self._native_recursive(ms[0], max_iter, binds)
+                    if native is not None:
+                        results[ms[0].name] = native
+                        continue
                 frontiers: Dict[str, DataFrame] = {}
-                # r19 opt (guide §1.2/§5): LAZY localCheckpoint + one
-                # count() per frontier — the count job materializes the
-                # checkpoint blocks AND returns the exact row count, so
-                # the separate eager-checkpoint job and the per-frontier
-                # isEmpty() jobs (two per frontier per iteration)
-                # disappear: one bounded Spark job per member per
-                # superstep instead of three.
+                # LAZY localCheckpoint + one count() per frontier: the
+                # count job both materializes the blocks and sizes them
                 counts: Dict[str, int] = {}
                 for m in ms:
                     # bases may reference earlier strata (completed)
@@ -193,99 +200,6 @@ class Compiler:
                     counts[m.name] = f.count()
                     frontiers[m.name] = f
                     results[m.name] = f
-                # r19 opt (guide §2.4/§1.2): a SOLO linear UNION ALL
-                # member (the generator/chain shape) evaluates K steps
-                # per Spark job — step_{i+1} binds to step_i's LAZY
-                # plan, the K tagged step outputs union into ONE
-                # localCheckpoint, and a tiny count-by-tag read of the
-                # checkpointed blocks replaces K separate
-                # materialize+count rounds. At cluster scale each
-                # superstep is a full barrier, so K-fold fewer
-                # barriers; locally it removes ~2/3 of the per-
-                # iteration fixed cost. Rows are identical: tag t+1
-                # rows are kept only when tag t was non-empty, which
-                # reproduces the sequential loop's stop-before-
-                # step(empty) semantics even for steps that are
-                # non-empty on an empty working table (e.g. a LEFT
-                # JOIN with the recursive name on the right).
-                unroll = int(
-                    self.spark.conf.get("spark.sqlpp.recursive.unroll", "4")
-                )
-                solo_all = (
-                    len(ms) == 1
-                    and ms[0].union_all
-                    and not getattr(ms[0], "nonlinear", False)
-                    and unroll > 1
-                )
-                if solo_all:
-                    m = ms[0]
-                    tag = "__sqlpp_unroll_tag"
-                    it = 0
-                    frontier = frontiers[m.name]
-                    cnt = counts[m.name]
-                    while cnt > 0:
-                        if it >= max_iter:
-                            raise SqlppError(
-                                f"recursive CTE {m.name!r} did not "
-                                f"terminate within {max_iter} iterations "
-                                "(set spark.sqlpp.recursive.maxIterations "
-                                "to raise)"
-                            )
-                        k_steps = min(unroll, max_iter - it)
-                        subs = []
-                        cur = frontier
-                        for t in range(k_steps):
-                            self.catalog = {
-                                **orig_catalog, **results, m.name: cur,
-                            }
-                            nxt = branch(m.step_ctx, m.row)
-                            subs.append(
-                                nxt.withColumn(tag, F.lit(t))
-                            )
-                            cur = nxt
-                        u = subs[0]
-                        for s in subs[1:]:
-                            u = u.union(s)
-                        # the union carries K x the frontier's
-                        # partitions, and the NEXT frontier is a
-                        # filter of it — without this narrow coalesce
-                        # the partition count multiplies by K per
-                        # batch (exponential: 1->4->16->64 empty
-                        # tasks on a generator spine). Coalescing
-                        # back to the frontier's own width restores
-                        # the sequential path's per-superstep
-                        # parallelism.
-                        p_front = max(1, frontier.rdd.getNumPartitions())
-                        u = u.coalesce(p_front)
-                        u = u.localCheckpoint(eager=False)
-                        tag_counts = {
-                            int(r[tag]): int(r["count"])
-                            for r in u.groupBy(tag).count().collect()
-                        }
-                        empty_at = next(
-                            (
-                                t
-                                for t in range(k_steps)
-                                if tag_counts.get(t, 0) == 0
-                            ),
-                            None,
-                        )
-                        valid = k_steps if empty_at is None else empty_at
-                        it += valid
-                        if valid > 0:
-                            kept = u
-                            if valid < k_steps:
-                                kept = u.filter(F.col(tag) < valid)
-                            results[m.name] = results[m.name].union(
-                                kept.drop(tag)
-                            )
-                        if empty_at is not None:
-                            break
-                        frontier = u.filter(
-                            F.col(tag) == k_steps - 1
-                        ).drop(tag)
-                        cnt = tag_counts.get(k_steps - 1, 0)
-                    continue
                 for _i in range(max_iter):
                     if all(c == 0 for c in counts.values()):
                         break
@@ -302,7 +216,7 @@ class Compiler:
                         # closure terminating (UNION-distinct only,
                         # parser-enforced). Both bindings see earlier
                         # strata's full results.
-                        if getattr(m, "nonlinear", False):
+                        if m.nonlinear:
                             self.catalog = {**orig_catalog, **results}
                             self._fresh_names = frozenset(
                                 mm.name for mm in ms
@@ -324,9 +238,7 @@ class Compiler:
                         new[m.name] = nxt.localCheckpoint(eager=False)
                         counts[m.name] = new[m.name].count()
                     frontiers = new
-                    has_nonlinear = any(
-                        getattr(m, "nonlinear", False) for m in ms
-                    )
+                    has_nonlinear = any(m.nonlinear for m in ms)
                     for m in ms:
                         if counts[m.name] > 0:
                             merged = results[m.name].union(
@@ -350,12 +262,12 @@ class Compiler:
                                 )
                             results[m.name] = merged
                 else:
-                    names = ", ".join(m.name for m in ms)
-                    raise SqlppError(
-                        f"recursive CTE {names!r} did not terminate "
-                        f"within {max_iter} iterations (set "
-                        "spark.sqlpp.recursive.maxIterations to raise)"
-                    )
+                    # the cap is spent; an empty last frontier means
+                    # the recursion ended on exactly the last step
+                    if any(c > 0 for c in counts.values()):
+                        raise not_terminated(
+                            max_iter, ", ".join(m.name for m in ms)
+                        )
             self.catalog = {**orig_catalog, **results}
             if isinstance(q.ctx, SetOpCtx):
                 out = self.compile_setop(q.ctx, binds)
@@ -365,6 +277,41 @@ class Compiler:
             return out
         finally:
             self.catalog = orig_catalog
+
+    def _native_recursive(
+        self, m, max_iter: int, binds: Bindings
+    ) -> Optional[DataFrame]:
+        """One linear UNION ALL member as Spark's native recursive CTE.
+        The catalog tables and earlier-stratum results it reads are
+        ``spark.sql`` DataFrame kwargs (its formatter creates and drops
+        their temp views). None keeps the member on the driver loop:
+        the ``spark`` dialect cannot print it, or Spark's (eager, job-
+        free) analysis rejects the recursive reference's place."""
+        from pyspark.errors import AnalysisException
+
+        from sqlpp_spark.compiler.sqlgen import spark_recursive_sql
+
+        keys: Dict[str, str] = {}
+
+        def frame_key(name: str) -> str:
+            if name not in self.catalog:
+                raise SqlppError(f"table not registered in catalog: {name}")
+            return keys.setdefault(name, f"t{len(keys)}")
+
+        try:
+            text = spark_recursive_sql(m, binds.values, frame_key, max_iter)
+        except SqlppError:
+            return None
+        frames = {k: self.catalog[name] for name, k in keys.items()}
+        try:
+            # spark.sql formats (unescapes braces) only when given kwargs
+            return self.spark.sql(text, **frames) if frames else (
+                self.spark.sql(text.format())
+            )
+        except AnalysisException as e:
+            if e.getCondition() == "INVALID_RECURSIVE_REFERENCE.PLACE":
+                return None
+            raise
 
     # -- set operations (r14) ----------------------------------------------
 

@@ -134,6 +134,10 @@ _DIALECTS = {
             f"CAST(round(CAST({a[0]} AS NUMERIC), 0) "
             f"AS DOUBLE PRECISION)"
         ),
+        # no argmin/argmax aggregate; regexp_match returns a groups
+        # array with other miss/group-0 semantics; log2 is log(2, x)
+        # in NUMERIC
+        "no_fns": frozenset({"arg_min", "arg_max", "regexp_extract", "log2"}),
     },
     "sqlite": {
         "int_div": lambda a, b: f"({a} / {b})",
@@ -169,8 +173,60 @@ _DIALECTS = {
         # SQLite spells strpos as instr (r14 string pack)
         "strpos": lambda a: f"CAST(instr({a[0]}, {a[1]}) AS BIGINT)",
         "contains": lambda a: f"(instr({a[0]}, {a[1]}) > 0)",
+        # none of: statistical/bitwise/argmin aggregates, ordered
+        # string_agg (3.44+), regexps, md5, translate, logs or the ISO
+        # calendar (strftime diverges); scalar max/min are
+        # NULL-on-any-NULL where the dialect skips NULLs
+        "no_fns": frozenset({
+            "stddev", "variance", "stddev_pop", "var_pop", "median",
+            "corr", "covar_samp", "covar_pop", "mode", "arg_min",
+            "arg_max", "bit_and", "bit_or", "bit_xor", "string_agg",
+            "split_part", "regexp_replace", "regexp_like",
+            "regexp_extract", "greatest", "least", "md5", "epoch",
+            "last_day", "dayofweek", "week", "quarter", "dayofyear",
+            "make_date", "make_timestamp", "translate", "log10", "log2",
+        }),
+    },
+    # Spark SQL, for the native WITH RECURSIVE lowering
+    # (compile._native_recursive): each hook spells what the Column
+    # compiler builds (try_divide/try_mod keep NULL on a zero divisor
+    # under ANSI mode). The text is a ``spark.sql(text, **frames)``
+    # format string: identifiers and literals double their braces, and
+    # ``table_ref`` prints frame placeholders. Only _SPARK_FNS print.
+    "spark": {
+        "q": lambda s: _fmt_esc("`" + s.replace("`", "``") + "`"),
+        "lit": lambda v: _fmt_esc(_str_lit(str(v).replace("\\", "\\\\"))),
+        "types": {
+            **SQL_TYPES, "string": "STRING", "time": "STRING",
+            "interval": "INTERVAL DAY TO SECOND",
+        },
+        "int_div": lambda a, b: f"CAST(try_divide({a}, {b}) AS BIGINT)",
+        "div": lambda a, b: f"try_divide({a}, {b})",
+        "text_ty": "STRING",
+        "substring": lambda a: "substring({}, {}, {})".format(*a),
+        "mod": lambda a: f"try_mod({a[0]}, {a[1]})",
+        "round": lambda a: f"round({a[0]}, 0)",
+        "strpos": lambda a: f"CAST(instr({a[0]}, {a[1]}) AS BIGINT)",
+        "contains": lambda a: f"contains({a[0]}, {a[1]})",
     },
 }
+
+_SPARK_FNS = frozenset({
+    "=", "!=", ">", ">=", "<", "<=", "and", "or", "not", "-u", "+", "-",
+    "*", "/", "mod", "is null", "is not null", "is distinct from",
+    "is not distinct from", "nullif", "coalesce", "case", "tostring",
+    "like", "upper", "lower", "length", "concat", "trim", "ltrim",
+    "rtrim", "replace", "lpad", "rpad", "repeat", "reverse", "left",
+    "right", "strpos", "contains", "starts_with", "ends_with",
+    "substring", "substr", "abs", "round", "floor", "ceil", "sqrt",
+    "pow", "exp", "ln", "greatest", "least", "md5", "year", "month",
+    "day", "hour", "minute", "second", "count", "sum", "min", "max",
+    "avg", "count_distinct", "sum_distinct",
+})
+
+
+def _fmt_esc(s: str) -> str:
+    return s.replace("{", "{{").replace("}", "}}")
 
 
 # r14: RIGHT/FULL/CROSS joined the dialect (LEFT/INNER since r01);
@@ -357,14 +413,28 @@ def _duck_try_cast_timestamp(raw: str) -> str:
 class SqlGen:
     def __init__(
         self, params: Optional[Dict[str, object]] = None,
-        dialect: str = "duckdb",
+        dialect: str = "duckdb", table_ref=None,
     ):
         self.params = params or {}
         if dialect not in _DIALECTS:
             raise SqlppError(f"unknown SQL dialect: {dialect}")
         self.dialect = dialect
         self.d = _DIALECTS[dialect]
+        self._q = self.d.get("q", _q)
+        self._lit = self.d.get("lit", _str_lit)
+        # table name -> printed FROM reference (default: the quoted name)
+        self.table_ref = table_ref or self._q
         self._setop_n = 0
+        # printing a WHERE clause: the one place the spark dialect
+        # prints IN/EXISTS subqueries (Spark rejects them elsewhere)
+        self._in_where = False
+
+    def _ty(self, kind: str) -> str:
+        return self.d.get("types", SQL_TYPES)[kind]
+
+    def _spark_refuse(self, what: str) -> None:
+        if self.dialect == "spark":
+            raise SqlppError(f"the spark dialect does not print {what}")
 
     # -- select ------------------------------------------------------------
 
@@ -374,10 +444,10 @@ class SqlGen:
         if ctx.select.qualify is not None:
             return self._select_qualify(ctx)
         sel = ctx.select
-        parts: List[str] = []
+        outer_where, self._in_where = self._in_where, False
         fields = [f for f in ctx.fields if f.is_used]
         cols = (
-            ", ".join(f"{self.expr(f.expr)} AS {_q(f.out_name)}" for f in fields)
+            ", ".join(f"{self.expr(f.expr)} AS {self._q(f.out_name)}" for f in fields)
             or "1 AS _dummy"
         )
         head = "DISTINCT " if sel.distinct else ""
@@ -385,24 +455,16 @@ class SqlGen:
             # r16: DuckDB and PG support DISTINCT ON natively with
             # the same first-row-per-group-in-ORDER-BY semantics the
             # engine compiles; SQLite has no DISTINCT ON
+            self._spark_refuse("DISTINCT ON")
             if self.dialect == "sqlite":
                 raise SqlppError(
                     "SQLite has no DISTINCT ON (backend divergence)"
                 )
             ons = ", ".join(self.expr(x) for x in sel.distinct_on)
             head = f"DISTINCT ON ({ons}) "
-        parts.append(f"SELECT {head}{cols}")
-        if sel.from_ is not None:
-            parts.append(f"FROM {self._from(ctx, sel.from_)}")
-        if sel.where is not None:
-            parts.append(f"WHERE {self.expr(sel.where)}")
-        gb = self._group_by_sql(ctx)
-        if gb:
-            parts.append(gb)
         # GROUP BY () — global aggregation: plain aggregate query (the
         # analyzer guarantees every output is under an aggregate)
-        if sel.having is not None:
-            parts.append(f"HAVING {self.expr(sel.having)}")
+        parts = self._core(ctx, head + cols)
         if sel.order_by:
             parts.append(
                 "ORDER BY "
@@ -412,7 +474,25 @@ class SqlGen:
                 )
             )
         parts.extend(self._limit_offset_sql(sel.limit, sel.offset))
+        self._in_where = outer_where
         return " ".join(parts)
+
+    def _core(self, ctx: SelectCtx, cols: str) -> List[str]:
+        """SELECT <cols> [FROM] [WHERE] [GROUP BY] [HAVING]."""
+        sel = ctx.select
+        parts = [f"SELECT {cols}"]
+        if sel.from_ is not None:
+            parts.append(f"FROM {self._from(ctx, sel.from_)}")
+        if sel.where is not None:
+            self._in_where = True
+            parts.append(f"WHERE {self.expr(sel.where)}")
+            self._in_where = False
+        gb = self._group_by_sql(ctx)
+        if gb:
+            parts.append(gb)
+        if sel.having is not None:
+            parts.append(f"HAVING {self.expr(sel.having)}")
+        return parts
 
     def _limit_offset_sql(self, limit, offset) -> List[str]:
         """LIMIT/OFFSET tail. The dialect supports OFFSET without
@@ -477,10 +557,11 @@ class SqlGen:
         and the ORDER BY expressions as extra columns; the outer
         filters and orders by them). DuckDB's native QUALIFY is the
         independent cross-check in the tests."""
+        self._spark_refuse("QUALIFY")
         sel = ctx.select
         fields = [f for f in ctx.fields if f.is_used]
         inner_cols = [
-            f"{self.expr(f.expr)} AS {_q(f.out_name)}" for f in fields
+            f"{self.expr(f.expr)} AS {self._q(f.out_name)}" for f in fields
         ] or ["1 AS _dummy"]
         inner_cols.append(f'{self.expr(sel.qualify)} AS "__qual"')
         if sel.distinct:
@@ -490,18 +571,8 @@ class SqlGen:
             # (they would break the dedup).
             from sqlpp_spark.frontend.ast import expr_key
 
-            parts = [f"SELECT {', '.join(inner_cols)}"]
-            if sel.from_ is not None:
-                parts.append(f"FROM {self._from(ctx, sel.from_)}")
-            if sel.where is not None:
-                parts.append(f"WHERE {self.expr(sel.where)}")
-            gb = self._group_by_sql(ctx)
-            if gb:
-                parts.append(gb)
-            if sel.having is not None:
-                parts.append(f"HAVING {self.expr(sel.having)}")
-            inner = " ".join(parts)
-            names = ", ".join(_q(f.out_name) for f in fields) or "1"
+            inner = " ".join(self._core(ctx, ", ".join(inner_cols)))
+            names = ", ".join(self._q(f.out_name) for f in fields) or "1"
             out = [
                 f'SELECT DISTINCT {names} FROM ({inner}) AS "_qw" '
                 f'WHERE "__qual"'
@@ -513,25 +584,15 @@ class SqlGen:
                     name = next(
                         f.out_name for f in fields if expr_key(f.expr) == k
                     )
-                    refs.append(f"{_q(name)} {_order_suffix(o)}")
+                    refs.append(f"{self._q(name)} {_order_suffix(o)}")
                 out.append("ORDER BY " + ", ".join(refs))
             out.extend(self._limit_offset_sql(sel.limit, sel.offset))
             return " ".join(out)
         for i, o in enumerate(sel.order_by):
             inner_cols.append(f'{self.expr(o.expr)} AS "__ob{i}"')
-        parts = [f"SELECT {', '.join(inner_cols)}"]
-        if sel.from_ is not None:
-            parts.append(f"FROM {self._from(ctx, sel.from_)}")
-        if sel.where is not None:
-            parts.append(f"WHERE {self.expr(sel.where)}")
-        gb = self._group_by_sql(ctx)
-        if gb:
-            parts.append(gb)
-        if sel.having is not None:
-            parts.append(f"HAVING {self.expr(sel.having)}")
-        inner = " ".join(parts)
+        inner = " ".join(self._core(ctx, ", ".join(inner_cols)))
         names = ", ".join(
-            _q(f.out_name) for f in fields
+            self._q(f.out_name) for f in fields
         ) or "1 AS _dummy"
         out = [f'SELECT {names} FROM ({inner}) AS "_qw" WHERE "__qual"']
         if sel.order_by:
@@ -556,7 +617,7 @@ class SqlGen:
         row = sctx.row()
 
         def _sql_ty(t) -> str:
-            n = SQL_TYPES[t.kind]
+            n = self._ty(t.kind)
             if n == "DOUBLE" and self.dialect == "postgres":
                 return "DOUBLE PRECISION"
             return n
@@ -574,11 +635,11 @@ class SqlGen:
             alias = f"_sb{self._setop_n}"
             self._setop_n += 1
             cols = ", ".join(
-                f"CAST({_q(bn)} AS {_sql_ty(t)}) AS {_q(n)}"
-                if bt.kind != t.kind else _q(bn)
+                f"CAST({self._q(bn)} AS {_sql_ty(t)}) AS {self._q(n)}"
+                if bt.kind != t.kind else self._q(bn)
                 for (bn, bt), (n, t) in zip(brow, row)
             )
-            return f"SELECT {cols} FROM ({s}) AS {_q(alias)}"
+            return f"SELECT {cols} FROM ({s}) AS {self._q(alias)}"
 
         op_sql = {
             "union": "UNION", "intersect": "INTERSECT", "except": "EXCEPT",
@@ -593,7 +654,7 @@ class SqlGen:
         if sctx.order_names:
             parts.append(
                 "ORDER BY " + ", ".join(
-                    f"{_q(n)} {_order_suffix(o)}"
+                    f"{self._q(n)} {_order_suffix(o)}"
                     for n, o in sctx.order_names
                 )
             )
@@ -646,17 +707,18 @@ class SqlGen:
             return f"{left} {kw} {right} ON {on_sql}"
         if isinstance(fr, A.FromTable):
             alias = fr.alias or fr.table
-            t = _q(fr.table)
-            return t if alias == fr.table else f"{t} AS {_q(alias)}"
+            t = self.table_ref(fr.table)
+            return t if t == self._q(alias) else f"{t} AS {self._q(alias)}"
         if isinstance(fr, A.FromSelect):
             rel = ctx.rels[fr.alias]
             if isinstance(rel, RecQueryRel):  # recursive view (r17)
+                self._spark_refuse("a nested WITH RECURSIVE")
                 # WITH RECURSIVE inside a derived table — DuckDB, PG
                 # and SQLite all accept the inline form
                 inner = select_sql(rel.info, self.params, self.dialect)
-                return f"({inner}) AS {_q(fr.alias)}"
+                return f"({inner}) AS {self._q(fr.alias)}"
             if isinstance(rel, SetOpRel):  # FROM (compound) AS a (r14)
-                return f"({self._setop(rel.sctx)}) AS {_q(fr.alias)}"
+                return f"({self._setop(rel.sctx)}) AS {self._q(fr.alias)}"
             assert isinstance(rel, SelectRel)
             # r17 LATERAL: the body's analyzed WHERE carries the
             # re-inserted _corr conjuncts, so the native correlated
@@ -665,6 +727,7 @@ class SqlGen:
             kw = ""
             body = None
             if getattr(fr, "lateral", False):
+                self._spark_refuse("LATERAL")
                 if self.dialect == "sqlite":
                     raise SqlppError(
                         "SQLite has no JOIN LATERAL "
@@ -695,10 +758,11 @@ class SqlGen:
                     )
             if body is None:
                 body = self.select(rel.ctx)
-            return f"{kw}({body}) AS {_q(fr.alias)}"
+            return f"{kw}({body}) AS {self._q(fr.alias)}"
         if isinstance(fr, A.FromSeries):
             # DuckDB/PG share the inclusive generate_series table fn;
             # SQLite has none
+            self._spark_refuse("generate_series")
             if self.dialect == "sqlite":
                 raise SqlppError(
                     "SQLite has no generate_series table function "
@@ -723,12 +787,12 @@ class SqlGen:
                 )
                 return (
                     f"range({a}, {stop}, {c}) "
-                    f"AS {_q(fr.alias)}({_q(fr.col)})"
+                    f"AS {self._q(fr.alias)}({self._q(fr.col)})"
                 )
             args = [a, b] + ([c] if fr.step is not None else [])
             return (
                 f"generate_series({', '.join(args)}) "
-                f"AS {_q(fr.alias)}({_q(fr.col)})"
+                f"AS {self._q(fr.alias)}({self._q(fr.col)})"
             )
         raise SqlppError(f"bad from node {type(fr).__name__}")
 
@@ -744,24 +808,31 @@ class SqlGen:
     # -- expressions -------------------------------------------------------
 
     def expr(self, e: A.Expr) -> str:
+        if isinstance(e, (A.EWindow, A.EQuant, A.EScalarSub)) or (
+            isinstance(e, (A.EIn, A.EExists)) and not self._in_where
+        ):
+            self._spark_refuse(f"{type(e).__name__} here")
         if isinstance(e, A.ELit):
             if e.lit_kind == "string":
-                return _str_lit(e.value)
+                return self._lit(e.value)
             if e.lit_kind == "bool":
                 return "TRUE" if e.value else "FALSE"
+            if isinstance(e.value, float) and self.dialect == "spark":
+                # a bare 0.5 is a DECIMAL literal in Spark SQL
+                return f"CAST({e.value!r} AS DOUBLE)"
             return repr(e.value)
         if isinstance(e, A.ENull):
-            ty = SQL_TYPES.get(e.ty.kind, "VARCHAR") if e.ty is not None else "VARCHAR"
+            ty = self._ty(e.ty.kind) if e.ty is not None else "VARCHAR"
             return f"CAST(NULL AS {ty})"
         if isinstance(e, A.ERef):
-            return f"{_q(e.rel)}.{_q(e.name)}"
+            return f"{self._q(e.rel)}.{self._q(e.name)}"
         if isinstance(e, A.ENav):
             # raw (pre-elaboration) qualified reference in DML position
             if isinstance(e.expr, A.EName):
-                return f"{_q(e.scope)}.{_q(e.expr.name)}"
-            return f"{_q(e.scope)}.{self.expr(e.expr)}"
+                return f"{self._q(e.scope)}.{self._q(e.expr.name)}"
+            return f"{self._q(e.scope)}.{self.expr(e.expr)}"
         if isinstance(e, A.EName):
-            return _q(e.name)
+            return self._q(e.name)
         if isinstance(e, A.EParam):
             return self._param(e)
         if isinstance(e, A.EMatch):
@@ -776,7 +847,7 @@ class SqlGen:
                         f"{self.dialect} has no TRY_CAST "
                         "(backend divergence)"
                     )
-                t = SQL_TYPES[e.to_ty.kind]
+                t = self._ty(e.to_ty.kind)
                 src_ty = getattr(e.expr, "ty", None)
                 if e.to_ty.kind in ("date", "datetime") and (
                     src_ty is None or src_ty.kind == "string"
@@ -809,7 +880,7 @@ class SqlGen:
                         )
                     t = "TEXT" if kind == "string" else SQL_TYPES[kind]
                     return f"CAST({self.expr(e.expr)} AS {t})"
-                t = SQL_TYPES[kind]
+                t = self._ty(kind)
                 if t == "DOUBLE" and self.dialect == "postgres":
                     t = "DOUBLE PRECISION"
                 if (
@@ -935,13 +1006,19 @@ class SqlGen:
         v = self.params[e.name]
         ty = e.ty or e.ascribed
         if v is None:
-            t = SQL_TYPES.get(ty.kind, "VARCHAR") if ty is not None else "VARCHAR"
+            t = self._ty(ty.kind) if ty is not None else "VARCHAR"
             return f"CAST(NULL AS {t})"
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
+        if self.dialect == "spark":
+            # the Column compiler's F.lit(v).cast(type)
+            if not isinstance(v, (int, float, str)) or ty is None:
+                self._spark_refuse(f"a {type(v).__name__} parameter")
+            lit = self._lit(v) if isinstance(v, str) else repr(v)
+            return f"CAST({lit} AS {self._ty(ty.kind)})"
         if isinstance(v, (int, float)):
             return repr(v)
-        return _str_lit(str(v))
+        return self._lit(str(v))
 
     def _match(self, e: A.EMatch) -> str:
         val = self.params.get(e.param)
@@ -963,11 +1040,20 @@ class SqlGen:
                 else:
                     for pname, pval in zip(br.params, payload):
                         inner[pname] = pval
-                return SqlGen(inner, self.dialect).expr(br.body)
+                return SqlGen(inner, self.dialect, self.table_ref).expr(
+                    br.body
+                )
         raise SqlppError(f"no branch for variant tag {tag!r} in MATCH ?{e.param}")
 
     def _app(self, e: A.EApp) -> str:
         fn = e.fn.lower()
+        if fn in self.d.get("no_fns", ()) or (
+            self.dialect == "spark" and fn not in _SPARK_FNS
+        ):
+            raise SqlppError(
+                f"the {self.dialect} dialect does not print {fn}() "
+                "(backend divergence)"
+            )
 
         def a(i: int) -> str:
             return self.expr(e.args[i])
@@ -1028,12 +1114,8 @@ class SqlGen:
                   "median"):
             # DuckDB and PG both alias stddev=stddev_samp and
             # variance=var_samp, so the dialect spelling prints
-            # verbatim; SQLite has no statistical aggregates. median:
-            # DuckDB native; PG spells it percentile_cont(0.5).
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    f"SQLite has no {fn}() aggregate (backend divergence)"
-                )
+            # verbatim. median: DuckDB native; PG spells it
+            # percentile_cont(0.5).
             if fn == "median":
                 if self.dialect == "postgres":
                     return (
@@ -1043,38 +1125,17 @@ class SqlGen:
                 return f"CAST(median({a(0)}) AS DOUBLE)"
             return f"{fn}({a(0)})"
         if fn in ("corr", "covar_samp", "covar_pop"):
-            # bivariate statistics (r15): DuckDB/PG spell them the
-            # same; SQLite has none
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    f"SQLite has no {fn}() aggregate (backend divergence)"
-                )
+            # bivariate statistics (r15): DuckDB/PG spell them the same
             return f"{fn}({a(0)}, {a(1)})"
         if fn == "mode":
-            # DuckDB plain-call; PG ordered-set form; SQLite none
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    "SQLite has no mode() aggregate (backend divergence)"
-                )
+            # DuckDB plain-call; PG ordered-set form
             if self.dialect == "postgres":
                 return f"mode() WITHIN GROUP (ORDER BY {a(0)})"
             return f"mode({a(0)})"
-        if fn in ("arg_min", "arg_max"):
-            # DuckDB native; PG/SQLite have no argmin/argmax aggregate
-            if self.dialect != "duckdb":
-                raise SqlppError(
-                    f"{self.dialect} has no {fn}() aggregate "
-                    "(backend divergence)"
-                )
+        if fn in ("arg_min", "arg_max"):  # DuckDB native
             return f"{fn}({a(0)}, {a(1)})"
         if fn in ("bit_and", "bit_or", "bit_xor"):
-            # r16: DuckDB/PG(14+) have all three natively; SQLite has
-            # no bitwise aggregates
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    f"SQLite has no {fn}() aggregate "
-                    "(backend divergence)"
-                )
+            # r16: DuckDB/PG(14+) have all three natively
             return f"CAST({fn}({a(0)}) AS BIGINT)"
         if fn == "count_if":
             # r16: PG/SQLite lack count_if — the SUM(CASE) composition
@@ -1095,12 +1156,7 @@ class SqlGen:
             return f"{fn}({a(0)})"
         if fn == "string_agg":
             # the dialect's string_agg is ORDER-BY-value by definition
-            # (analyze.py) — print the ordered form; SQLite grew
-            # aggregate ORDER BY only in 3.44 (backend divergence)
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    "SQLite has no ordered string_agg (backend divergence)"
-                )
+            # (analyze.py) — print the ordered form
             return f"string_agg({a(0)}, {a(1)} ORDER BY {a(0)})"
         if fn in AGG_FNS:
             return f"{fn}({a(0)})"
@@ -1119,6 +1175,9 @@ class SqlGen:
                 # INTERVAL n UNIT form, PG wants the quoted string;
                 # SQLite has no interval type
                 iv = e.args[1]
+                if self.dialect == "spark":
+                    n = iv.n if fn == "+" else -iv.n
+                    return f"timestampadd({iv.unit.upper()}, {n}, {a(0)})"
                 if self.dialect == "sqlite":
                     raise SqlppError(
                         "SQLite has no INTERVAL arithmetic "
@@ -1137,6 +1196,8 @@ class SqlGen:
                 # truncation toward zero, NULL on /0 — the engine's
                 # try_divide().cast("long") semantics (see _DIALECTS)
                 return self.d["int_div"](a(0), a(1))
+            if "div" in self.d:
+                return self.d["div"](a(0), a(1))
             return f"({a(0)} / {a(1)})"
         if fn == "is null":
             return f"({a(0)} IS NULL)"
@@ -1173,11 +1234,13 @@ class SqlGen:
         if fn == "like":
             pat = e.args[1]
             if isinstance(pat, A.ELit) and pat.lit_kind == "string":
+                esc = self._lit("\\")
                 # explicit ESCAPE: Spark's implicit default is '\' but
                 # DuckDB/SQLite have NONE — identical spelling in all
                 # three dialects pins the engine's semantics
                 return (
-                    f"({a(0)} LIKE {_str_lit(pat.value)} ESCAPE '\\')"
+                    f"({a(0)} LIKE {self._lit(pat.value)} "
+                    f"ESCAPE {esc})"
                 )
             raise SqlppError("like() pattern must be a string literal", pat.loc)
         if fn == "case":
@@ -1195,13 +1258,14 @@ class SqlGen:
             vals = [e.args[2 * i + 1] for i in range(n // 2)]
             if n % 2 == 1:
                 vals.append(e.args[n - 1])
-            if ty is not None and any(
+            if ty is not None and (self.dialect == "spark" or any(
                 x.ty is not None and x.ty.kind != ty.kind for x in vals
-            ):
+            )):
+                # spark: the Column compiler always casts CASE to its type
                 cast_ty = (
                     "DOUBLE PRECISION"
                     if self.dialect == "postgres" and ty.kind == "float"
-                    else SQL_TYPES[ty.kind]
+                    else self._ty(ty.kind)
                 )
                 return f"CAST(({s}) AS {cast_ty})"
             return f"({s})"
@@ -1211,10 +1275,6 @@ class SqlGen:
                 and fn in self.d:
             return f"CAST({self.d[fn](a(0))} AS BIGINT)"
         if fn in ("split_part", "regexp_replace", "regexp_like"):
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    f"SQLite has no {fn}() (backend divergence)"
-                )
             if fn == "split_part":
                 # DuckDB returns '' for a NULL input string — the
                 # dialect pins SQL's strict NULL-in -> NULL-out
@@ -1229,13 +1289,6 @@ class SqlGen:
                 return f"({a(0)} ~ {a(1)})"
             return f"regexp_matches({a(0)}, {a(1)})"
         if fn in ("greatest", "least"):
-            if self.dialect == "sqlite":
-                # SQLite scalar max/min return NULL when ANY arg is
-                # NULL — the dialect pins skip-NULL (divergence)
-                raise SqlppError(
-                    "SQLite max/min scalars are NULL-on-any-NULL "
-                    "(backend divergence)"
-                )
             args = ", ".join(a(i) for i in range(len(e.args)))
             return f"{fn}({args})"
         if fn in ("date_add", "date_diff", "date_trunc"):
@@ -1259,22 +1312,13 @@ class SqlGen:
             ty = e.ty
             t = SQL_TYPES.get(ty.kind, "TIMESTAMP") if ty else "TIMESTAMP"
             return f"CAST(date_trunc({a(0)}, {a(1)}) AS {t})"
-        if fn == "md5":
-            # r15: content fingerprint — SQLite ships no md5()
-            if self.dialect == "sqlite":
-                raise SqlppError("SQLite has no md5() (backend divergence)")
+        if fn == "md5":  # r15: content fingerprint
             return f"md5({a(0)})"
         if fn in (
             "epoch", "last_day", "dayofweek", "week", "quarter",
             "dayofyear", "make_date", "make_timestamp",
         ):
-            # r16 temporal wave — SQLite's strftime-based calendar
-            # diverges (non-ISO weeks, no typed dates), like the rest
-            # of the date family
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    f"SQLite has no {fn}() (backend divergence)"
-                )
+            # r16 temporal wave
             pg = self.dialect == "postgres"
             if fn == "epoch":
                 inner = (
@@ -1305,20 +1349,9 @@ class SqlGen:
             return f"{fn}({args})"
         if fn == "regexp_extract":
             # r16: DuckDB's regexp_extract matches Spark ('' on miss,
-            # NULL in -> NULL out, group 0 = whole match — probed);
-            # PG's regexp_match returns a groups array with different
-            # miss/group-0 semantics, SQLite has no regexp at all
-            if self.dialect != "duckdb":
-                raise SqlppError(
-                    f"{self.dialect} has no regexp_extract() "
-                    "(backend divergence)"
-                )
+            # NULL in -> NULL out, group 0 = whole match — probed)
             return f"regexp_extract({a(0)}, {a(1)}, {a(2)})"
         if fn == "translate":
-            if self.dialect == "sqlite":
-                raise SqlppError(
-                    "SQLite has no translate() (backend divergence)"
-                )
             return f"translate({a(0)}, {a(1)}, {a(2)})"
         if fn == "trunc":
             if self.dialect == "sqlite":
@@ -1330,17 +1363,10 @@ class SqlGen:
             # pins Spark's DOUBLE result
             return f"CAST(sign({a(0)}) AS DOUBLE)"
         if fn in ("log10", "log2"):
-            # NULL on out-of-domain (DuckDB/PG raise); PG has log10
-            # but spells log2 as log(2, x) in NUMERIC — divergence.
-            # log2 prints as ln(x)/ln(2): Spark computes it that way,
-            # and DuckDB's native log2 differs in the last ulp
-            # (probed: log2(10)) while the ln-ratio is bit-equal
-            if self.dialect == "sqlite" or (
-                self.dialect == "postgres" and fn == "log2"
-            ):
-                raise SqlppError(
-                    f"{self.dialect} has no {fn}() (backend divergence)"
-                )
+            # NULL on out-of-domain (DuckDB/PG raise). log2 prints as
+            # ln(x)/ln(2): Spark computes it that way, and DuckDB's
+            # native log2 differs in the last ulp (probed: log2(10))
+            # while the ln-ratio is bit-equal
             body = (
                 f"(ln({a(0)}) / ln(2.0))" if fn == "log2"
                 else f"log10({a(0)})"
@@ -1456,6 +1482,31 @@ def select_sql(
             f"WITH RECURSIVE {', '.join(parts)} {g.select(info.ctx)}"
         )
     return g.select(info.ctx)
+
+
+def spark_recursive_sql(m, params, frame_key, max_level: int) -> str:
+    """A linear UNION ALL member (analyze.RecMemberInfo) as a Spark
+    ``WITH RECURSIVE`` format string; every other table it reads prints
+    as the ``{frame_key(name)}`` placeholder. Both branches are cast to
+    the member row (as the Column compiler's ``align`` does): Spark's
+    UnionLoop needs anchor and step types to match exactly."""
+    name = _DIALECTS["spark"]["q"](m.name)
+    g = SqlGen(params, "spark", lambda t: (
+        name if t == m.name else "{" + frame_key(t) + "}"
+    ))
+    names = ", ".join(g._q(n) for n, _t in m.row)
+    cols = ", ".join(
+        f"CAST({g._q(n)} AS {g._ty(t.kind)}) AS {g._q(n)}" for n, t in m.row
+    )
+
+    def aligned(ctx) -> str:
+        return f"SELECT {cols} FROM ({g.select(ctx)}) AS `_b` ({names})"
+
+    return (
+        f"WITH RECURSIVE {name} ({names}) MAX RECURSION LEVEL {max_level} "
+        f"AS ({aligned(m.base_ctx)} UNION ALL {aligned(m.step_ctx)}) "
+        f"SELECT * FROM {name}"
+    )
 
 
 def statement_sql(

@@ -23,14 +23,19 @@ Mirrors the reference's runtime shapes (SURVEY.md §2.10):
 from __future__ import annotations
 
 import os
+import re
 import shutil
+from contextlib import contextmanager
 from typing import Dict, List, Optional
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sqlpp_spark.compiler.compile import Bindings, Compiler, spark_type
+from sqlpp_spark.compiler.compile import (
+    Bindings, Compiler, not_terminated, spark_type,
+)
 from sqlpp_spark.frontend import ast as A
 from sqlpp_spark.frontend.analyze import Analyzer, Env, QueryInfo
 from sqlpp_spark.frontend.errors import SqlppError
@@ -262,6 +267,24 @@ def ty_from_spark(dt: T.DataType, nullable: bool) -> Optional[Ty]:
     return mk_ty(kind, not nullable)
 
 
+@contextmanager
+def _recursion_cap():
+    """A native recursive CTE (compile._native_recursive) hits its
+    MAX RECURSION LEVEL while the action runs, as Spark's
+    RECURSION_LEVEL_LIMIT_EXCEEDED; re-raise it as the SqlppError the
+    driver loop raises at compile time."""
+    try:
+        yield
+    except Py4JJavaError as e:
+        hit = re.search(
+            r"RECURSION_LEVEL_LIMIT_EXCEEDED\] Recursion level limit (\d+)",
+            str(e),
+        )
+        if hit is None:
+            raise
+        raise not_terminated(hit.group(1)) from e
+
+
 class PreparedQuery:
     """An analyzed query: type-checked, parameter-typed, compilable."""
 
@@ -468,13 +491,15 @@ class SqlppEngine:
         ``~record:t`` variant of the reference's fetch_list. The
         prepared row type is validated against the record's fields
         before any Spark job runs."""
-        rows = self._fetch_df(src, record, params).collect()
+        with _recursion_cap():
+            rows = self._fetch_df(src, record, params).collect()
         if record is None:
             return rows
         return [record(**r.asDict()) for r in rows]
 
     def fetch_option(self, src: str, record: Optional[type] = None, **params) -> Optional[Row]:
-        rows = self._fetch_df(src, record, params).limit(2).collect()
+        with _recursion_cap():
+            rows = self._fetch_df(src, record, params).limit(2).collect()
         if len(rows) > 1:
             raise SqlppError("fetch_option: query returned more than one row")
         if not rows:
@@ -497,7 +522,8 @@ class SqlppEngine:
         return prepared.df(**params)
 
     def fetch_json(self, src: str, **params) -> List[str]:
-        return self.query(src, **params).toJSON().collect()
+        with _recursion_cap():
+            return self.query(src, **params).toJSON().collect()
 
     def fold(self, src: str, init, f, **params):
         """Streamed row fold — the reference's primary result sink
@@ -505,8 +531,9 @@ class SqlppEngine:
         Rows stream through ``toLocalIterator`` so the driver holds one
         partition at a time, not the whole result."""
         acc = init
-        for row in self.query(src, **params).toLocalIterator():
-            acc = f(row, acc)
+        with _recursion_cap():
+            for row in self.query(src, **params).toLocalIterator():
+                acc = f(row, acc)
         return acc
 
     def compile_expr_param(self, prepared: PreparedQuery, expr_src: str) -> Column:

@@ -1460,8 +1460,8 @@ def synthesize_audio(
                 out["payload"].append(buf.getvalue())
             yield pd.DataFrame(out)
 
-    cols = {id_col, freq_from}
-    return df.select(*cols).mapInPandas(
+    cols = list(dict.fromkeys((id_col, freq_from)))
+    return ensure_parallelism(df.select(*cols)).mapInPandas(
         synth, "media_id long, kind string, payload binary"
     )
 

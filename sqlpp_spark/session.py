@@ -34,6 +34,14 @@ def get_spark(app_name: str = "sqlpp_spark", cpus: int | None = None) -> SparkSe
     """Build (or reuse) a SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+
+    PySpark's per-call origin capture
+    (``spark.python.sql.dataFrameDebugging.enabled``, a static conf) is
+    off: it adds py4j round trips around every ``functions`` call the
+    sqlpp compiler makes. What users lose is the Python call site in
+    the query context of Spark runtime errors; for a sqlpp query that
+    site is a line of ``compiler/compile.py``, and sqlpp's own errors
+    carry source locations (``frontend/errors.py``).
     """
     if cpus is None:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -96,6 +104,11 @@ def get_spark(app_name: str = "sqlpp_spark", cpus: int | None = None) -> SparkSe
         # driver fixtures store events.ts as TIMESTAMP(NANOS); read as
         # long and convert in sources/tables.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # a native recursive CTE (compiler/compile.py) is bounded by
+        # spark.sqlpp.recursive.maxIterations, as the driver loop is,
+        # not by a row count the loop does not have
+        .config("spark.sql.cteRecursionRowLimit", "-1")
     )
     spark = builder.getOrCreate()
     try:

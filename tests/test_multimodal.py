@@ -257,6 +257,20 @@ def test_audio_wav_decode_real_samples(spark):
         assert abs(r.zero_crossings - expected_zc) <= 3, (mid, r.zero_crossings)
 
 
+def test_audio_synthesis_fans_out(spark, sf_dir):
+    """synthesize_audio routes its Python stage through
+    ensure_parallelism like every other synthesizer: a one-file scan
+    must not run it as a single task."""
+    from sqlpp_spark.ops.multimodal import synthesize_audio
+    from sqlpp_spark.sources.tables import read_table
+
+    d = read_table(spark, sf_dir, "documents")
+    wav = synthesize_audio(d, freq_from="doc_id")
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    assert wav.rdd.getNumPartitions() >= min(target, d.count()) > 1
+
+
 def test_audio_non_wav_fallback_and_boundary(spark):
     from sqlpp_spark.ops.multimodal import decode_audio
 

@@ -1,18 +1,24 @@
 """WITH RECURSIVE (r17, beyond reference — the reference grammar has
-no CTEs at all, parser.mly). The engine compiles the recursive member
-to bounded supersteps (compiler/compile.py _compile_recursive): each
-iteration binds the CTE name to the previous iteration's new rows
-(the standard SQL working table), localCheckpoints the batch, and
-stops at the empty working table or the
-spark.sqlpp.recursive.maxIterations guard. DuckDB runs both the
+no CTEs at all, parser.mly). The engine lowers a lone linear UNION ALL
+member to Spark's native recursive CTE, and runs every other stratum
+in bounded supersteps on the driver (compiler/compile.py
+_compile_recursive): each iteration binds the CTE name to the previous
+iteration's new rows (the standard SQL working table),
+localCheckpoints the batch, and stops at the empty working table or
+the spark.sqlpp.recursive.maxIterations guard. DuckDB runs both the
 ORIGINAL source and the printed SQL natively — two independent
-oracles per query."""
+oracles per query — and the native lowering is checked row for row
+against the driver loop (forced with _on_loop)."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager, nullcontext
+from unittest.mock import patch
 
 import duckdb
 import pytest
 
+from sqlpp_spark.compiler.compile import Compiler
 from sqlpp_spark.compiler.sqlgen import select_sql
 from sqlpp_spark.frontend.analyze import Analyzer
 from sqlpp_spark.frontend.errors import SqlppError
@@ -45,6 +51,33 @@ def eng(spark):
         spark.createDataFrame(EDGES, "id long, parent long, val long"),
     )
     return eng
+
+
+@contextmanager
+def _on_loop():
+    """Force every stratum onto the driver loop."""
+    with patch.object(Compiler, "_native_recursive", lambda *a: None):
+        yield
+
+
+@contextmanager
+def _count_native():
+    """Yield a list that records, per native attempt, whether the
+    member lowered to Spark's recursive CTE."""
+    lowered = []
+    orig = Compiler._native_recursive
+
+    def counting(self, *a):
+        out = orig(self, *a)
+        lowered.append(out is not None)
+        return out
+
+    with patch.object(Compiler, "_native_recursive", counting):
+        yield lowered
+
+
+def _rows(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
 
 
 @pytest.fixture()
@@ -180,14 +213,75 @@ def test_empty_base_short_circuits(eng, duck):
 
 def test_max_iteration_guard(spark, eng):
     spark.conf.set("spark.sqlpp.recursive.maxIterations", "5")
+    src = (
+        "with recursive t (n) as (select 1 as n union all "
+        "select n + 1 as n from t) select n from t"
+    )
     try:
         with pytest.raises(SqlppError, match="did not terminate within 5"):
-            eng.query(
-                "with recursive t (n) as (select 1 as n union all "
-                "select n + 1 as n from t) select n from t"
-            ).collect()
+            eng.fetch_list(src)
+        # the native plan hits Spark's MAX RECURSION LEVEL at run time;
+        # the raw DataFrame surfaces Spark's own error
+        with pytest.raises(
+            Exception,
+            match=r"RECURSION_LEVEL_LIMIT_EXCEEDED\] Recursion level limit 5 ",
+        ):
+            eng.query(src).collect()
+        # every engine fetch API re-raises it as the SqlppError
+        agg = "select count(1) as c from t group by ()"
+        src_agg = src.replace("select n from t", agg)
+        for fetch in (
+            lambda: eng.fetch_option(src_agg),
+            lambda: eng.fetch_json(src_agg),
+            lambda: eng.fold(src_agg, 0, lambda r, acc: acc + 1),
+        ):
+            with pytest.raises(SqlppError, match="within 5 iterations"):
+                fetch()
     finally:
         spark.conf.unset("spark.sqlpp.recursive.maxIterations")
+
+
+@pytest.mark.parametrize(
+    "kw,force_loop",
+    [("union all", False), ("union all", True), ("union", False)],
+    ids=["native", "forced-loop", "union-loop"],
+)
+def test_iteration_cap_boundary(spark, eng, kw, force_loop):
+    # 9 productive steps, then an empty one: a cap of 10 is enough and
+    # 9 is not, on the native plan and on the driver loop alike
+    src = (
+        f"with recursive t (n) as (select 1 as n {kw} "
+        "select n + 1 as n from t where n < 10) select n from t"
+    )
+    try:
+        with _on_loop() if force_loop else nullcontext():
+            with _count_native() as native:
+                spark.conf.set("spark.sqlpp.recursive.maxIterations", "10")
+                rows = sorted(r[0] for r in eng.fetch_list(src))
+                assert rows == list(range(1, 11))
+                spark.conf.set("spark.sqlpp.recursive.maxIterations", "9")
+                with pytest.raises(
+                    SqlppError, match="did not terminate within 9 "
+                ):
+                    eng.fetch_list(src)
+        assert native == ([] if kw == "union" else [not force_loop] * 2)
+    finally:
+        spark.conf.unset("spark.sqlpp.recursive.maxIterations")
+
+
+def test_native_recursion_has_no_row_cap(spark, eng):
+    # Spark's default spark.sql.cteRecursionRowLimit (1,000,000) would
+    # fail this 1.5M-row generator; session.get_spark lifts it
+    eng.add_decls("create table seeds (n int not null);")
+    eng.register_df("seeds", spark.range(750000).withColumnRenamed("id", "n"))
+    with _count_native() as native:
+        rows = eng.fetch_list(
+            "with recursive t (n) as (select n from seeds union all "
+            "select n + 750000 as n from t where n < 750000) "
+            "select count(1) as c from t group by ()"
+        )
+    assert native == [True]
+    assert rows[0][0] == 1500000
 
 
 def test_fmt_roundtrip(eng):
@@ -297,13 +391,18 @@ if _HAS_HYP:
     )
     @given(_recurrence())
     def test_recursive_property_differential(eng, duck, src):
-        rows = sorted(r[0] for r in eng.fetch_list(src))
+        # native (UNION ALL) vs the forced driver loop vs DuckDB
+        with _count_native() as native:
+            rows = sorted(r[0] for r in eng.fetch_list(src))
+        assert native == ([True] if "union all" in src else []), src
+        with _on_loop():
+            loop = sorted(r[0] for r in eng.fetch_list(src))
         info = Analyzer(eng.env, src).analyze_query(parse_query(src))
         want = sorted(
             r[0] for r in duck.execute(select_sql(info)).fetchall()
         )
         want2 = sorted(r[0] for r in duck.execute(src).fetchall())
-        assert rows == want == want2, src
+        assert rows == loop == want == want2, src
 
     @st.composite
     def _mutual_recurrence(draw):
@@ -441,15 +540,9 @@ def test_recursive_view_and_derived_table(eng, duck):
 
 def test_recursive_view_two_uses_compile_fixpoint_once(eng, duck):
     """r17 advisor (low): a query referencing a recursive view twice
-    (self-join over the closure) must run the iterative fixpoint
-    ONCE — the compiler memoizes the compiled recursion per QueryInfo
-    for the lifetime of one compile."""
-    from unittest.mock import patch
-
-    # patch the CONCRETE class: pyspark.sql.DataFrame is the abstract
-    # facade in Spark 4; instances dispatch to classic.dataframe
-    from pyspark.sql.classic.dataframe import DataFrame
-
+    (self-join over the closure) must lower the recursion ONCE — the
+    compiler memoizes the compiled recursion per QueryInfo for the
+    lifetime of one compile."""
     eng.add_decls(
         "create query closure as with recursive t (id) as "
         "(select id from edges where parent is null union all "
@@ -458,18 +551,10 @@ def test_recursive_view_two_uses_compile_fixpoint_once(eng, duck):
     )
     src = ("select a.id as x, b.id as y from closure as a "
            "join closure as b on b.id = a.id + 1 order by x")
-    calls = {"n": 0}
-    orig = DataFrame.localCheckpoint
-
-    def counting(self, *a, **kw):
-        calls["n"] += 1
-        return orig(self, *a, **kw)
-
-    with patch.object(DataFrame, "localCheckpoint", counting):
+    with _count_native() as native:
         rows = sorted(tuple(r) for r in eng.fetch_list(src))
-    # the DAG has depth 4 -> base + <= depth frontiers; a second
-    # (unmemoized) fixpoint would double the checkpoint count
-    assert 0 < calls["n"] <= 6, calls
+    # an unmemoized second use would lower the recursion again
+    assert native == [True]
     duck.execute(
         "CREATE VIEW closure AS WITH RECURSIVE t (id) AS "
         "(SELECT id FROM edges WHERE parent IS NULL UNION ALL "
@@ -673,65 +758,121 @@ def test_nonlinear_self_ref_in_subquery_counted(eng):
         )
 
 
-# -- superstep unrolling (r19 optimization) ---------------------------------
-# A solo linear UNION ALL member evaluates spark.sqlpp.recursive.unroll
-# steps per Spark job (tagged union, one localCheckpoint, count-by-tag);
-# rows must be identical to the one-step-per-job path for every unroll
-# factor, including terminations that fall mid-batch.
+# -- native recursive CTE vs the driver loop ----------------------------------
+# A lone linear UNION ALL member runs as Spark's native recursive CTE;
+# its rows must equal the driver loop's (forced with _on_loop).
 
 
-def _with_unroll(spark, u):
-    spark.conf.set("spark.sqlpp.recursive.unroll", str(u))
+def _native_vs_loop(eng, src):
+    with _count_native() as native:
+        df = eng.query(src)
+        rows = _rows(df.collect())
+    assert native == [True], src
+    with _on_loop():
+        assert _rows(eng.fetch_list(src)) == rows, src
+    return df, rows
 
 
-def test_unroll_factors_row_identical(spark, eng, duck):
-    # 10 steps: terminates mid-batch for u in {3, 4}, on-boundary for 5
+def test_native_counter_matches_loop(eng, duck):
     src = (
         "with recursive t (n) as (select 1 as n union all "
         "select n + 1 as n from t where n < 10) select n from t"
     )
-    try:
-        for u in (1, 2, 3, 4, 5, 16):
-            _with_unroll(spark, u)
-            _differ(eng, duck, src)
-    finally:
-        spark.conf.unset("spark.sqlpp.recursive.unroll")
+    _native_vs_loop(eng, src)
+    _differ(eng, duck, src)
 
 
-def test_unroll_discards_steps_after_empty_frontier(spark, eng, duck):
+def test_native_stops_at_empty_frontier(eng, duck):
     # A step that is NON-EMPTY on an empty working table (NOT EXISTS
-    # over the recursive name): the sequential loop stops before ever
-    # evaluating it, so the unrolled batch must discard every tag at or
-    # after the first empty one — otherwise the phantom 100-row leaks.
+    # over the recursive name): both evaluations stop at the first
+    # empty step, so the phantom 100-row never appears.
     src = (
         "with recursive t (n) as (select 1 as n union all "
         "select 100 as n from edges as e where e.id = 1 "
         "and not exists (select 1 as x from t as x)) "
         "select n from t"
     )
-    try:
-        for u in (1, 4):
-            _with_unroll(spark, u)
-            _differ(eng, duck, src)
-            assert sorted(r[0] for r in eng.fetch_list(src)) == [1]
-    finally:
-        spark.conf.unset("spark.sqlpp.recursive.unroll")
+    _, rows = _native_vs_loop(eng, src)
+    assert rows == [(1,)]
+    _differ(eng, duck, src)
 
 
-def test_unroll_partition_count_stays_bounded(spark, eng):
-    # the batch union carries K x the frontier's partitions and the next
-    # frontier is a filter of it: without the narrow coalesce the width
-    # multiplies per batch (1 -> 4 -> 16 -> 64 on a generator spine).
+def test_native_prints_braces_and_backslashes(eng, duck):
+    # the spark dialect doubles backslashes (Spark reads them as
+    # escapes) and braces (the text is a spark.sql format string)
+    src = (
+        "with recursive t (n, s) as (select 1 as n, 'a{b}\\\\' as s "
+        "union all select n + 1 as n, concat(s, '}\\\\{') as s "
+        "from t where n < 3) select n, s from t"
+    )
+    _, rows = _native_vs_loop(eng, src)
+    assert rows[-1] == (3, "a{b}\\\\}\\\\{}\\\\{")
+    _differ(eng, duck, src)
+
+
+def test_native_partition_count_stays_bounded(eng):
     src = (
         "with recursive t (n) as (select 1 as n union all "
         "select n + 1 as n from t where n < 12) select n from t"
     )
+    df, rows = _native_vs_loop(eng, src)
+    assert df.rdd.getNumPartitions() <= 64
+    assert sorted(r[0] for r in rows) == list(range(1, 13))
+
+
+@pytest.mark.parametrize(
+    "src",
+    [
+        # aggregate over the recursive name
+        "with recursive t (n) as (select 1 as n union all "
+        "select t.n + 1 as m from t group by t.n having t.n < 5) "
+        "select n from t",
+        # the recursive name on the right side of a LEFT JOIN
+        "with recursive t (n) as (select 1 as n union all "
+        "select t.n + 1 as n from edges as e left join t on t.n = e.id "
+        "where t.n < 5) select n from t",
+    ],
+    ids=["aggregate", "left-join-right"],
+)
+def test_steps_spark_rejects_stay_on_loop(eng, duck, src):
+    # Spark's analyzer refuses these recursive references
+    # (INVALID_RECURSIVE_REFERENCE.PLACE); the driver loop runs them
+    with _count_native() as native:
+        _differ(eng, duck, src)
+    assert native == [False]
+
+
+@pytest.mark.parametrize(
+    "name", ["sqlpp_recursive_chain", "sqlpp_recursive_spine"]
+)
+def test_registry_recursion_native_loop_oracle(spark, sf_dir, name):
+    from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+    from sqlpp_spark.testing.oracle import compare, run_oracle
+
+    _ensure_loaded()
+    spec = REGISTRY[name]
+    with _count_native() as native:
+        df = spec.builder(spark, sf_dir)
+    assert native == [True]
+    with _on_loop():
+        assert _rows(spec.builder(spark, sf_dir).collect()) == _rows(
+            df.collect()
+        )
+    assert compare(df, run_oracle(spec.oracle, sf_dir))["match"]
+
+
+def test_spine_builds_with_no_jobs_as_one_union_loop(spark, sf_dir):
+    from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    build = REGISTRY["sqlpp_recursive_spine"].builder
+    build(spark, sf_dir)  # first use registers the engine's tables
+    sc = spark.sparkContext
+    group = "sqlpp-spine-build"
+    sc.setJobGroup(group, "spine build")
     try:
-        _with_unroll(spark, 4)
-        df = eng.query(src)
-        # observed 32 (= local parallelism) with the coalesce; the
-        # un-coalesced union multiplies per batch (32*(1+4+16+64))
-        assert df.rdd.getNumPartitions() <= 64
-        assert sorted(r[0] for r in df.collect()) == list(range(1, 13))
+        df = build(spark, sf_dir)
     finally:
-        spark.conf.unset("spark.sqlpp.recursive.unroll")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert "UnionLoop" in df._jdf.queryExecution().optimizedPlan().toString()
