@@ -261,6 +261,7 @@ class SelectCtx:
         self.group_keys: List[tuple] = []
         self.group_exprs: List[A.Expr] = []
         self.own_synthetic: Dict[str, Ty] = {}  # struct-sty fields (decl-time)
+        self.agg_depth = 0  # > 0 while inferring an aggregate's arguments
 
     def add_field(self, f: A.Field) -> None:
         self.fields.append(f)
@@ -1625,7 +1626,13 @@ class Analyzer:
         if isinstance(e, A.EWindow):
             return self._infer_window(ctx, e)
         if isinstance(e, A.EApp):
-            return self._infer_app(ctx, e)
+            if e.fn.lower() not in AGG_FNS:
+                return self._infer_app(ctx, e)
+            ctx.agg_depth += 1
+            try:
+                return self._infer_app(ctx, e)
+            finally:
+                ctx.agg_depth -= 1
         if isinstance(e, A.EInList):
             return self._infer_inlist(ctx, e)
         if isinstance(e, A.EIn):
@@ -1742,6 +1749,14 @@ class Analyzer:
         # own projection fields: inline the defining expression
         # (same-scope `with` semantics, analyze.ml:401-407)
         f = ctx.by_name.get(n)
+        if f is not None and ctx.agg_depth and any(
+            app.fn.lower() in AGG_FNS for app in _iter_apps(f.expr)
+        ):
+            # an aggregate's argument ranges over input rows: inlining
+            # an aggregated field there would nest aggregates, so the
+            # name means the input column (`select max(n) + 1 as n ...
+            # having max(n) < 5`), as it does in DuckDB and Spark
+            f = None
         if f is not None:
             inlined = copy.deepcopy(f.expr)
             return inlined, f.expr.ty

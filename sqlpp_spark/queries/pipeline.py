@@ -413,6 +413,12 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # _shingle_rows drops docs with no tokens (__n > 0), so `enriched`
+    # holds only docs with a shingle row, while the oracle keeps every
+    # quality-passing doc. They agree only while NULL text scores NULL
+    # quality (filtered above) and split() never yields an empty array
+    # (a blank text splits to [""]: one shingle). Pinned by
+    # tests/test_ops.py::test_clean_corpus_matches_oracle_on_null_and_blank_texts.
     enriched.count()  # eager: five downstream branches read it
     keep_ids = enriched.groupBy("__ch").agg(F.min("doc_id").alias("doc_id"))
     kept = enriched.join(keep_ids, on="doc_id", how="left_semi")

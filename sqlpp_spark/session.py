@@ -42,6 +42,22 @@ def get_spark(app_name: str = "sqlpp_spark", cpus: int | None = None) -> SparkSe
     the query context of Spark runtime errors; for a sqlpp query that
     site is a line of ``compiler/compile.py``, and sqlpp's own errors
     carry source locations (``frontend/errors.py``).
+
+    Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+    a static conf) holds 2,000 classes instead of Spark's 100. An
+    embedder runs a fixed set of query shapes over and over, and each
+    action Janino-compiles its whole-stage code unless the cache still
+    holds it. The 15 ``perfbench`` dialect rows and ``dedup_minhash``
+    need about 180 classes, so a 100-entry LRU recompiles most of them
+    on every repetition. One pass over the 28 headline rows and every
+    ``sqlpp_`` row (106 rows at sf0.01) compiles 1,430 distinct
+    classes; 2,000 holds that working set with headroom. The cost is
+    about 14 MB more JVM metaspace for the ~1,460 classes kept. The size
+    stays bounded because Spark compiles some bind values into the
+    code as constants: with an unbounded cache, varying binds would
+    grow metaspace without limit. The conf is static and JVM-wide: an
+    embedder who passes their own session to ``SqlppEngine`` must set
+    it on their own builder.
     """
     if cpus is None:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -109,6 +125,8 @@ def get_spark(app_name: str = "sqlpp_spark", cpus: int | None = None) -> SparkSe
         # spark.sqlpp.recursive.maxIterations, as the driver loop is,
         # not by a row count the loop does not have
         .config("spark.sql.cteRecursionRowLimit", "-1")
+        # see the docstring
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     spark = builder.getOrCreate()
     try:

@@ -164,6 +164,14 @@ def test_nested_agg_error(env):
         analyze(env, "select count(count(1)) from users group by ()")
 
 
+def test_aggregated_alias_inside_aggregate_is_the_input_column(env):
+    # `max(id)` in HAVING/ORDER BY ranges over input rows: the output
+    # field `id` (itself an aggregate) must not inline there
+    src = ("select max(id) + 1 as id from users group by () "
+           "having max(id) < 5 order by max(id)")
+    assert row_sig(env, src) == [("id", "INT NOT NULL")]
+
+
 def test_non_grouped_column_error(env):
     with pytest.raises(SqlppError, match="not in GROUP BY"):
         analyze(env, "select count(1), id from users group by ()")

@@ -1736,3 +1736,43 @@ def test_knn_graph_output_identical_across_cosine_paths(spark):
             spark.conf.set("spark.sqlpp.ann.pythonProbes", "true")
             spark.conf.set("spark.sqlpp.ann.pythonCosine", "true")
     assert out["true"] == out["false"] and len(out["true"]) > 0
+
+
+def test_clean_corpus_matches_oracle_on_null_and_blank_texts(spark, sf_dir, tmp_path):
+    """The fused pipeline_clean_corpus keeps only docs with a shingle
+    row; its oracle keeps every quality-passing doc. Pin that the two
+    agree on NULL, empty and whitespace-only texts, including blank
+    texts long enough to pass the quality filter."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sqlpp_spark.ops import release_intermediates
+    from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+    from sqlpp_spark.testing.oracle import compare, run_oracle
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    blanks = [None, "", " ", "   ", " " * 60, "\t\n " * 20, " the " * 12,
+              "The " + " " * 60]
+    extra = pa.table(
+        {
+            "doc_id": [10_000 + i for i in range(len(blanks))],
+            "text": blanks,
+            "lang": ["en"] * len(blanks),
+            "source": ["blank"] * len(blanks),
+            "n_chars": [None if t is None else len(t) for t in blanks],
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, extra]), tmp_path / "documents.parquet")
+
+    _ensure_loaded()
+    spec = REGISTRY["pipeline_clean_corpus"]
+    df = spec.builder(spark, str(tmp_path))
+    try:
+        report = compare(df, run_oracle(spec.oracle, str(tmp_path)))
+        kept = {r[0] for r in df.select("doc_id").collect()}
+    finally:
+        release_intermediates(df)
+    assert report["match"], report["detail"]
+    # the blank texts long enough to pass quality are in the output
+    assert {10_004, 10_006} <= kept

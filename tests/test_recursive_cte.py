@@ -202,6 +202,22 @@ def test_nullability_fixpoint(eng, duck):
     )
 
 
+def test_aggregate_step_having_reads_input_column(eng, duck):
+    # inside max(..) in HAVING, `n` is t's column, not the aggregated
+    # output field `n` (which would nest max in max). Spark rejects
+    # aggregate steps natively, so this runs on the driver loop.
+    src = (
+        "with recursive t (n) as (select 1 as n union all "
+        "select max(n) + 1 as n from t group by () having max(n) < 5) "
+        "select n from t"
+    )
+    with _count_native() as native:
+        rows = eng.fetch_list(src)
+    assert sorted(r[0] for r in rows) == [1, 2, 3, 4, 5]
+    assert native == [False]
+    _differ(eng, duck, src)
+
+
 def test_empty_base_short_circuits(eng, duck):
     _differ(
         eng, duck,
