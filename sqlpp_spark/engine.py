@@ -9,23 +9,31 @@ Mirrors the reference's runtime shapes (SURVEY.md §2.10):
 - schema env with CREATE TABLE/QUERY/FIELDSET decls (sqlpp.ml:81-111),
   plus registration straight from Spark DataFrames/parquet
 - DML: INSERT / UPDATE / DELETE on parquet-backed managed tables,
-  crash-atomic via the versioned commit protocol below (or real Delta
-  ACID commits when delta-spark is on the classpath); the plan/row
+  crash-atomic via the manifest commit protocol below; the plan/row
   semantics (ON CONFLICT, RETURNING, joined UPDATE ... FROM) match the
-  reference (analyze.ml:826-998). A plain write runs one Spark job (the
-  version write): the engine remembers the schema of each version it
-  commits, so reading it back is a file listing, not footer inference.
-  RETURNING adds one more job, a local checkpoint of the affected rows
-  held in executor block storage; it lives as long as the returned
-  DataFrame and does not survive the loss of an executor
+  reference (analyze.ml:826-998). A version is a list of live files, so
+  a plain INSERT writes only its own rows, and an UPDATE/DELETE keyed on
+  the primary key rewrites only the files whose key range can match.
+  A write runs at most one Spark job (the version write); the manifest
+  carries the schema, so reading a version back is a file list, not
+  footer inference. RETURNING adds one more job, a local checkpoint of
+  the affected rows held in executor block storage; it lives as long as
+  the returned DataFrame and does not survive the loss of an executor.
+  An INSERT ... VALUES of literals returns its rows' frame as is: it
+  reads no table file. When its values are bare literals or parameters
+  of bigint, double, string or boolean columns, the engine writes them
+  itself with pyarrow, and the INSERT runs no Spark job at all
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
+import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass
 from typing import Dict, List, Optional
 
 from py4j.protocol import Py4JJavaError
@@ -42,58 +50,166 @@ from sqlpp_spark.frontend.errors import SqlppError
 from sqlpp_spark.frontend.parser import parse_query
 from sqlpp_spark.frontend.types import Ty, check_subsumes, ty as mk_ty
 
-# -- managed-table storage: versioned commit protocol ------------------------
+# -- managed-table storage: manifest commit protocol -------------------------
 #
 # Plain-parquet ``overwrite`` is NOT crash-atomic: a failure between the
 # delete and the write leaves a truncated table. Managed tables therefore
 # use a versioned layout mirroring the reference's transactional migration
-# apply (/root/reference/sqlpp_manage.ml:40-131):
+# apply (sqlpp_manage.ml:40-131), where each version is a
+# file manifest, the design Delta Lake uses for atomic commits without
+# full rewrites (Armbrust et al., "Delta Lake", VLDB 2020):
 #
 #   <table>.parquet/
-#     _v_0/ _v_1/ ...   immutable parquet version directories
+#     _v_0/ _v_1/ ...   the data files each version wrote, and its
+#       _FILES          manifest: the table schema plus every live data
+#                       file, its own and inherited ones (paths relative
+#                       to the table dir), with its row count and the
+#                       min/max of the primary-key columns
 #     _CURRENT          text file naming the active version
 #
-# A rewrite WRITES a fresh version dir (readers of the old version are
-# untouched), then flips _CURRENT with os.replace — the POSIX-atomic
-# commit point. Crash before the flip: the old version stays active and
-# the orphan dir is garbage-collected on the next commit. Crash after:
-# the new version is active. The previous version is kept for one commit
-# cycle (open readers), older ones are GC'd.
-#
-# When delta-spark is importable (not in this container), managed tables
-# use format("delta") instead and every mutation is a real ACID commit —
-# same call sites, gated by _HAS_DELTA.
-
-try:  # pragma: no cover - delta not in this image
-    import importlib.util as _ilu
-
-    _HAS_DELTA = _ilu.find_spec("delta") is not None
-except Exception:  # pragma: no cover
-    _HAS_DELTA = False
+# A commit writes only what it changed into a fresh version dir, reads
+# the new files' parquet footers in-process (pyarrow, no Spark job),
+# writes the manifest, then flips _CURRENT with os.replace — the
+# POSIX-atomic commit point. Readers of the old version are untouched.
+# Crash before the flip: the old version stays active and the orphan dir
+# is garbage. After the flip, GC deletes every file that no retained
+# manifest references: the new version's, its predecessor's (kept one
+# commit cycle for open readers) and those of newer dirs staged by a
+# migration transaction. A retired dir whose files are still live keeps
+# just those files and is no longer a version. Dirs written by the
+# earlier full-copy layout (no _FILES) read as the list of their files.
 
 _CURRENT = "_CURRENT"
+_FILES = "_FILES"
+# compaction: a file holding under 1/_SMALL_SHARE of the table's rows is
+# small; a write that would keep _FOLD_AT small files folds the _FOLD_AT
+# smallest into one file inside its own job. Small files therefore stop
+# piling up, at most _SMALL_SHARE files are not small, and reads stay
+# under Spark's parallel-listing threshold (32 paths), past which
+# building a read runs a listing job. A fold rewrites at most _FOLD_AT
+# files, each under 1/_SMALL_SHARE of the rows.
+_SMALL_SHARE = 8
+_FOLD_AT = 4
+
+
+@dataclass
+class Snapshot:
+    """One version of a managed table as its manifest lists it.
+    ``files`` holds ``{"path", "rows", "stats": {col: [min, max]}}``
+    entries, ``path`` relative to the table dir; ``schema`` is None for
+    a dir of the full-copy layout (Spark then infers it)."""
+
+    files: list
+    schema: Optional[T.StructType]
+
+
+def _vnum(name: str) -> Optional[int]:
+    return int(name[3:]) if name.startswith("_v_") and name[3:].isdigit() else None
+
+
+def _active(path: str) -> Optional[str]:
+    cur = os.path.join(path, _CURRENT)
+    if not os.path.isfile(cur):
+        return None
+    with open(cur) as fh:
+        return fh.read().strip()
+
+
+def _write_durable(target: str, text: str) -> None:
+    """Write ``target`` atomically and durably: tmp file, fsync, rename."""
+    tmp = target + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, target)
 
 
 def managed_data_dir(path: str) -> str:
-    """Active data directory of a managed table (versioned layout), or
-    ``path`` itself for legacy flat layouts / plain registered parquet."""
-    cur = os.path.join(path, _CURRENT)
-    if os.path.isfile(cur):
-        with open(cur) as fh:
-            return os.path.join(path, fh.read().strip())
-    return path
+    """Dir of a managed table's active version, which holds only the
+    files that version wrote (``read_managed_version`` reads the whole
+    table), or ``path`` itself for legacy flat layouts / plain
+    registered parquet."""
+    vdir = _active(path)
+    return path if vdir is None else os.path.join(path, vdir)
+
+
+def _entries(path: str, vdir: str, keys=()) -> list:
+    """Manifest entries of the parquet files directly under
+    ``path/vdir`` ("" is the flat layout), read from their footers. A
+    key gets a range only when every non-empty row group has min/max
+    statistics of an int or string."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(os.listdir(os.path.join(path, vdir))):
+        if not f.endswith(".parquet") or f.startswith((".", "_")):
+            continue
+        rel = os.path.join(vdir, f)
+        md = pq.read_metadata(os.path.join(path, rel))
+        stats = {}
+        for key in keys:
+            col = next((i for i in range(md.num_columns)
+                        if md.schema.column(i).path == key), None)
+            lo = hi = None
+            for g in range(md.num_row_groups if col is not None else 0):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(col).statistics
+                if st is None or not st.has_min_max or type(st.min) not in (int, str):
+                    lo = None
+                    break
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            if lo is not None:
+                stats[key] = [lo, hi]
+        out.append({"path": rel, "rows": md.num_rows, "stats": stats})
+    return out
+
+
+def _write_manifest(path: str, vdir: str, files: list, schema) -> None:
+    doc = {"schema": None if schema is None else schema.jsonValue(),
+           "files": files}
+    _write_durable(os.path.join(path, vdir, _FILES), json.dumps(doc))
+
+
+def read_snapshot(path: str, vdir: Optional[str] = None) -> Snapshot:
+    """The manifest of version ``vdir`` (default: the active one). A
+    full-copy dir without one lists its files and leaves the schema to
+    Spark's inference."""
+    if vdir is None:
+        vdir = _active(path) or ""
+    man = os.path.join(path, vdir, _FILES)
+    if not os.path.isfile(man):
+        return Snapshot(_entries(path, vdir), None)
+    with open(man) as fh:
+        doc = json.load(fh)
+    schema = doc["schema"] and T.StructType.fromJson(doc["schema"])
+    return Snapshot(doc["files"], schema)
+
+
+def _read_files(spark: SparkSession, path: str, files: list,
+               schema: Optional[T.StructType]) -> DataFrame:
+    """Read the given manifest entries of a managed table. A known
+    ``schema`` skips parquet footer inference, a Spark job; Spark reads
+    every field of a file source as nullable either way."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[os.path.join(path, f["path"]) for f in files])
 
 
 def list_versions(path: str) -> list:
-    """Version numbers present under a managed table dir, ascending.
-    The commit protocol retains the active version plus its immediate
-    predecessor (plus any not-yet-flipped staged dirs)."""
+    """Version numbers retained under a managed table dir, ascending:
+    the active version, its immediate predecessor and any not-yet-flipped
+    staged dirs. A table still in the full-copy layout lists every
+    version dir."""
     if not os.path.isdir(path):
         return []
-    return sorted(
-        int(d[3:]) for d in os.listdir(path)
-        if d.startswith("_v_") and d[3:].isdigit()
-    )
+    dirs = [d for d in os.listdir(path) if _vnum(d) is not None]
+    active = _active(path)
+    if active is not None and os.path.isfile(os.path.join(path, active, _FILES)):
+        dirs = [d for d in dirs if os.path.isfile(os.path.join(path, d, _FILES))]
+    return sorted(_vnum(d) for d in dirs)
 
 
 def read_managed_version(
@@ -105,15 +221,42 @@ def read_managed_version(
     is Delta/Iceberg territory, but one-version-back covers the
     'compare against pre-migration data' and 'open reader during
     rewrite' cases the protocol is built for)."""
-    if version is None:
-        return spark.read.parquet(managed_data_dir(path))
-    vdir = os.path.join(path, f"_v_{version}")
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(
-            f"version {version} not retained under {path} "
-            f"(have: {list_versions(path)})"
-        )
-    return spark.read.parquet(vdir)
+    vdir = None
+    if version is not None:
+        if version not in list_versions(path):
+            raise FileNotFoundError(
+                f"version {version} not retained under {path} "
+                f"(have: {list_versions(path)})"
+            )
+        vdir = f"_v_{version}"
+    snap = read_snapshot(path, vdir)
+    return _read_files(spark, path, snap.files, snap.schema)
+
+
+def _gc(path: str, retain, below: int) -> None:
+    """Delete what no retained manifest references: the files of every
+    version dir older than ``below`` other than ``retain``, and the loose
+    files of a flat layout. The manifests of ``retain`` and of every dir
+    newer than ``below`` (staged by a transaction) count. Idempotent, so
+    a crash midway leaves garbage the next flip removes."""
+    dirs = [d for d in os.listdir(path) if _vnum(d) is not None]
+    kept = [d for d in dirs if d in retain or _vnum(d) > below]
+    live = {f["path"] for d in kept for f in read_snapshot(path, d).files}
+    for d in dirs:
+        if d in kept:
+            continue
+        full = os.path.join(path, d)
+        for f in os.listdir(full):
+            if os.path.isdir(os.path.join(full, f)):  # a crashed write's _temporary
+                shutil.rmtree(os.path.join(full, f))
+            elif os.path.join(d, f) not in live:
+                os.remove(os.path.join(full, f))
+        if not os.listdir(full):
+            os.rmdir(full)
+    for f in os.listdir(path):
+        if (os.path.isfile(os.path.join(path, f)) and f not in live
+                and not f.startswith(_CURRENT)):
+            os.remove(os.path.join(path, f))
 
 
 def vacuum_managed(path: str) -> list:
@@ -124,92 +267,70 @@ def vacuum_managed(path: str) -> list:
     in-flight (or crashed-pending) migration transaction, and deleting
     them would wedge ``Migrate._recover``'s roll-forward. Returns the
     removed version numbers."""
-    cur = os.path.join(path, _CURRENT)
-    if not os.path.isfile(cur):
+    active = _active(path)
+    if active is None:
         return []
-    with open(cur) as fh:
-        active = fh.read().strip()
-    active_n = int(active[3:]) if active.startswith("_v_") else -1
-    removed = []
-    for d in os.listdir(path):
-        if (
-            d.startswith("_v_") and d != active and d[3:].isdigit()
-            and int(d[3:]) < active_n
-        ):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            removed.append(int(d[3:]))
-    return sorted(removed)
+    before = list_versions(path)
+    _gc(path, (active,), _vnum(active))
+    after = set(list_versions(path))
+    return [v for v in before if v not in after]
 
 
-def stage_version(path: str, write) -> str:
+def stage_version(path: str, write, keep=(), schema=None, keys=()) -> str:
     """Write a fresh version dir WITHOUT flipping _CURRENT — invisible
-    to readers until ``flip_current``. Returns the version dir name.
-    Orphans from a crashed transaction are GC'd by the next flip."""
+    to readers until ``flip_current``. ``write(dir)`` writes the
+    version's new data files (``write=None``: a version that only drops
+    files); the manifest lists them, minus empty ones, after the
+    inherited ``keep`` entries, with ``schema`` (None: readers infer it)
+    and the ranges of the ``keys`` columns. Returns the version dir
+    name. Orphans from a crashed commit are GC'd by the next flip."""
     os.makedirs(path, exist_ok=True)
-    versions = [
-        int(d[3:]) for d in os.listdir(path)
-        if d.startswith("_v_") and d[3:].isdigit()
-    ]
-    vdir = f"_v_{max(versions) + 1 if versions else 0}"
-    write(os.path.join(path, vdir))
+    nums = [_vnum(d) for d in os.listdir(path) if _vnum(d) is not None]
+    vdir = f"_v_{max(nums) + 1 if nums else 0}"
+    full = os.path.join(path, vdir)
+    if write is not None:
+        write(full)
+    os.makedirs(full, exist_ok=True)
+    new = _entries(path, vdir, keys)
+    _write_manifest(path, vdir, [*keep, *(f for f in new if f["rows"])], schema)
     return vdir
 
 
 def flip_current(path: str, vdir: str) -> None:
     """Atomically point _CURRENT at ``vdir`` (idempotent: a re-run
-    after a crash mid-recovery is a no-op). GC: removes version dirs
-    other than the new one and its immediate predecessor, and (on
-    first migration from a flat layout) the stale flat files."""
-    cur = os.path.join(path, _CURRENT)
-    prev = None
-    if os.path.isfile(cur):
-        with open(cur) as fh:
-            prev = fh.read().strip()
+    after a crash mid-recovery is a no-op), then GC (``_gc``): the new
+    version and its immediate predecessor are retained. A full-copy
+    version on either side gets its manifest first, so it stays a
+    retained version under this layout."""
+    prev = _active(path)
     if prev == vdir:
         return
     if not os.path.isdir(os.path.join(path, vdir)):
         raise FileNotFoundError(f"staged version missing: {path}/{vdir}")
-    tmp = cur + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(vdir)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, cur)  # commit point
-    target = int(vdir[3:]) if vdir[3:].isdigit() else None
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if d.startswith("_v_") and d not in (vdir, prev):
-            # GC only OLDER versions: a multi-intent transaction may
-            # have staged newer dirs this same flip must not eat
-            if target is None or (d[3:].isdigit() and int(d[3:]) < target):
-                shutil.rmtree(full, ignore_errors=True)
-        elif prev is None and os.path.isfile(full) and d not in (_CURRENT,):
-            # first commit over a legacy flat layout: drop stale files
-            try:
-                os.remove(full)
-            except OSError:
-                pass
+    for d in (prev, vdir):
+        if d is not None and not os.path.isfile(os.path.join(path, d, _FILES)):
+            snap = read_snapshot(path, d)
+            _write_manifest(path, d, snap.files, snap.schema)
+    _write_durable(os.path.join(path, _CURRENT), vdir)  # commit point
+    _gc(path, (vdir, prev), _vnum(vdir))
 
 
-def _version_identity(path: str) -> Optional[tuple]:
-    """Identity of a managed table's active version: its data dir plus
-    the dir's inode and mtime, so a table dropped and re-created under
-    the same path (whose first version is ``_v_0`` again) does not
-    match a record of the old one. None if there is no such dir."""
-    data_dir = managed_data_dir(path)
-    try:
-        st = os.stat(data_dir)
-    except FileNotFoundError:
-        return None
-    return data_dir, st.st_ino, st.st_mtime_ns
-
-
-def commit_version(path: str, write) -> str:
-    """Run ``write(new_version_dir)`` then atomically flip _CURRENT to
-    it. Returns the committed data dir."""
-    vdir = stage_version(path, write)
+def commit_version(path: str, write, keep=(), schema=None, keys=()) -> str:
+    """Stage a version (``stage_version``) and atomically flip _CURRENT
+    to it. Returns the committed dir, which holds only the files this
+    version wrote."""
+    vdir = stage_version(path, write, keep, schema, keys)
     flip_current(path, vdir)
     return os.path.join(path, vdir)
+
+
+def _fold(files: list) -> list:
+    """The files a commit keeping ``files`` folds into its write: the
+    _FOLD_AT smallest once that many are small, else none."""
+    total = sum(f["rows"] for f in files)
+    small = sorted((f for f in files if f["rows"] * _SMALL_SHARE < total),
+                   key=lambda f: f["rows"])
+    return small[:_FOLD_AT] if len(small) >= _FOLD_AT else []
 
 
 class StagedTxn:
@@ -228,19 +349,114 @@ class StagedTxn:
     def __init__(self):
         self.intents: list = []
 
-    def stage_write(self, path: str, df: DataFrame) -> str:
+    def stage_write(self, path: str, write, keep=(), schema=None, keys=()) -> str:
+        """Stage the table's next version (``stage_version``); returns
+        its dir name."""
         fresh = not os.path.exists(path)
-        vdir = stage_version(path, lambda d: df.write.parquet(d))
+        vdir = stage_version(path, write, keep, schema, keys)
         self.intents.append(
             {"op": "flip", "path": path, "version": vdir, "fresh": fresh}
         )
-        return os.path.join(path, vdir)
+        return vdir
+
+    def staged(self, path: str) -> Optional[str]:
+        """The latest version this transaction staged for ``path``."""
+        for it in reversed(self.intents):
+            if it["op"] == "flip" and it["path"] == path:
+                return it["version"]
+        return None
 
     def add_drop(self, path: str) -> None:
         self.intents.append({"op": "drop", "path": path})
 
     def add_rename(self, src: str, dst: str) -> None:
         self.intents.append({"op": "rename", "src": src, "dst": dst})
+
+
+_NOT_CONSTANT = object()
+
+
+def _constant(e, params):
+    """The value of a literal or bound parameter, else _NOT_CONSTANT."""
+    if isinstance(e, A.ENull):
+        return None
+    if isinstance(e, A.ELit):
+        return e.value
+    if isinstance(e, A.EParam) and not e.is_expr_param and e.name in params:
+        return params[e.name]
+    return _NOT_CONSTANT
+
+
+def _may_hold(entry: dict, col: str, vals: list) -> bool:
+    """Can the file behind a manifest entry hold a row whose ``col``
+    equals one of ``vals``? Only an int or string compared with a
+    recorded range of its own type is ever ruled out (bool is not int);
+    NULL equals nothing."""
+    rng = entry["stats"].get(col)
+    if rng is None:
+        return True
+    lo, hi = rng
+    return any(
+        v is not None and (type(v) is not type(lo) or lo <= v <= hi)
+        for v in vals
+    )
+
+
+# column types an append may write in-process: Spark type -> (Arrow type,
+# the Python types whose values need no cast to it)
+_LOCAL_TYPES = {
+    T.LongType: ("int64", (int,)),
+    T.DoubleType: ("float64", (int, float)),
+    T.StringType: ("string", (str,)),
+    T.BooleanType: ("bool", (bool,)),
+}
+
+
+def _local_write(rows: list, schema: T.StructType):
+    """A ``write`` that stores ``rows`` (dicts of Python values, a
+    missing column is NULL) as one parquet file in-process, with no
+    Spark job — or None unless every column of ``schema`` is bigint,
+    double, string or boolean and every value already has its column's
+    Python type, so no Spark cast could differ."""
+    import pyarrow as pa
+
+    arrays = []
+    for f in schema:
+        arrow_type, py_types = _LOCAL_TYPES.get(type(f.dataType), (None, ()))
+        vals = [r.get(f.name) for r in rows]
+        if arrow_type is None or any(
+            v is not None and (type(v) not in py_types or (
+                arrow_type == "int64" and not -2**63 <= v < 2**63))
+            for v in vals
+        ):
+            return None
+        if arrow_type == "float64":
+            vals = [None if v is None else float(v) for v in vals]
+        arrays.append(pa.array(vals, arrow_type))
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+
+    def write(d: str) -> None:
+        import pyarrow.parquet as pq
+
+        os.makedirs(d)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        pq.write_table(table, os.path.join(d, name), compression="snappy")
+
+    return write
+
+
+def _is_literal(e) -> bool:
+    """A VALUES expression that evaluates the same every time: literals
+    and parameters under casts and operators (no function call)."""
+    if isinstance(e, (A.ELit, A.ENull)):
+        return True
+    if isinstance(e, A.EParam):
+        return not e.is_expr_param
+    if isinstance(e, A.EAscribe):
+        return _is_literal(e.expr)
+    if isinstance(e, A.EApp):
+        return not e.fn[:1].isalpha() and all(_is_literal(a) for a in e.args)
+    return False
 
 
 _SPARK_TO_SQLPP = {
@@ -330,10 +546,6 @@ class SqlppEngine:
         # active migration transaction (manage.Migrate sets/clears it);
         # when set, storage writes stage instead of committing
         self._txn: Optional[StagedTxn] = None
-        # table path -> (identity of the version this engine committed,
-        # its schema); lets DML read that version back without a
-        # schema-inference job while it is still the active one
-        self._committed: Dict[str, tuple] = {}
 
     # -- analysis ----------------------------------------------------------
 
@@ -417,60 +629,70 @@ class SqlppEngine:
 
     def create_managed(self, name: str, path: str, df: DataFrame) -> None:
         """A parquet-backed table the engine may mutate (INSERT/UPDATE/
-        DELETE) — stored under the versioned commit protocol (or as a
-        Delta table when delta-spark is on the classpath)."""
-        if self._txn is not None and not _HAS_DELTA:
-            staged = self._txn.stage_write(path, df)
-            self.managed_paths[name] = path
-            # read-your-writes inside the transaction: the catalog sees
-            # the staged version while on-disk _CURRENT stays put
-            self.register_df(name, self.spark.read.parquet(staged))
-            return
-        committed = self._commit(path, df)
+        DELETE), stored under the manifest commit protocol."""
+        committed = self._commit_change(name, path, Snapshot([], None), [], df)
         self.managed_paths[name] = path
         self.register_df(name, committed)
 
-    def _commit(self, path: str, df: DataFrame) -> DataFrame:
-        """Commit ``df`` as the table's new active version and return a
-        fresh read of it. The schema of the written frame is remembered
-        with the version's identity, so the read back (and the next
-        ``_managed_df`` while no one else commits) infers nothing."""
-        if _HAS_DELTA:  # pragma: no cover - delta not in this image
-            df.write.format("delta").mode("overwrite").save(path)
-            return self._read_managed_path(path)
-        commit_version(path, lambda d: df.write.parquet(d))
-        schema = df.schema
-        self._committed[path] = (_version_identity(path), schema)
-        return self._read_managed_path(path, schema)
+    def _snapshot(self, path: str) -> Snapshot:
+        """A managed table's current manifest: inside a migration
+        transaction the version it staged last (read-your-writes; the
+        on-disk _CURRENT stays put), otherwise the committed one."""
+        return read_snapshot(
+            path, self._txn.staged(path) if self._txn is not None else None
+        )
 
-    def _read_managed_path(
-        self, path: str, schema: Optional[T.StructType] = None
+    def _managed_df(self, path: str) -> DataFrame:
+        """Current contents of a managed table. The read is always a
+        fresh one, never the catalog's frame, so a statement that also
+        reads the table through the catalog gets distinct expression
+        IDs; the manifest's schema spares it footer inference."""
+        snap = self._snapshot(path)
+        return _read_files(self.spark, path, snap.files, snap.schema)
+
+    def _commit_change(
+        self, table: str, path: str, snap: Snapshot, drop: list,
+        add: Optional[DataFrame], rows: Optional[list] = None,
     ) -> DataFrame:
-        """Read a managed table's ACTIVE version. A known ``schema``
-        skips parquet footer inference, a Spark job; Spark reads every
-        field of a file source as nullable, which is also what
-        inference returns for parquet Spark wrote."""
-        if _HAS_DELTA:  # pragma: no cover
-            return self.spark.read.format("delta").load(path)
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(managed_data_dir(path))
-
-    def _managed_df(self, table: str, path: str) -> DataFrame:
-        """Current contents of a managed table for DML: inside a
-        migration transaction the catalog entry points at staged
-        (uncommitted) data — read-your-writes; otherwise read the
-        committed _CURRENT version. The read is always a fresh one, never
-        the catalog's frame, so a statement that also reads the table
-        through the catalog gets distinct expression IDs. When the active
-        version is still the one this engine committed, its schema is
-        known; after a commit by anyone else (another engine,
-        ``manage.Migrate``) it is inferred again."""
-        if self._txn is not None and table in self.catalog:
-            return self.catalog[table]
-        ident, schema = self._committed.get(path, (None, None))
-        if ident != _version_identity(path):
-            schema = None
-        return self._read_managed_path(path, schema)
+        """Commit the next version of ``table`` — ``snap``'s files minus
+        ``drop`` plus the rows of ``add`` (None: no rows, no Spark job) —
+        and return a fresh read of it. Inside a migration transaction the
+        version is only staged. An ``add`` whose column types differ from
+        the kept files' (a value wider than the stored column) rewrites
+        the whole table under the unioned types; otherwise the write also
+        folds the small kept files (``_fold``) into one file. ``rows``,
+        ``add``'s rows as Python values, let a commit that neither
+        rewrites nor folds write them in-process (``_local_write``)."""
+        gone = {f["path"] for f in drop}
+        keep = [f for f in snap.files if f["path"] not in gone]
+        schema = snap.schema if add is None else add.schema
+        if keep and add is not None:
+            stored = snap.schema or _read_files(self.spark, path, keep, None).schema
+            if [(f.name, f.dataType) for f in schema] != [
+                (f.name, f.dataType) for f in stored
+            ]:
+                kept = _read_files(self.spark, path, keep, snap.schema)
+                add, keep, rows = kept.unionByName(add), [], None
+                schema = add.schema
+            elif fold := _fold(keep):
+                folded = {f["path"] for f in fold}
+                keep = [f for f in keep if f["path"] not in folded]
+                add = add.unionByName(
+                    _read_files(self.spark, path, fold, snap.schema).coalesce(1)
+                )
+                rows = None
+        write = None if add is None else add.write.parquet
+        if rows is not None:
+            write = _local_write(rows, schema) or write
+        keys = self._primary_key(table)
+        if self._txn is not None:
+            vdir = self._txn.stage_write(path, write, keep, schema, keys)
+        else:
+            vdir = os.path.basename(
+                commit_version(path, write, keep, schema, keys)
+            )
+        new = read_snapshot(path, vdir)
+        return _read_files(self.spark, path, new.files, new.schema)
 
     # -- query API ---------------------------------------------------------
 
@@ -583,7 +805,13 @@ class SqlppEngine:
     def _exec_insert(self, ins: A.Insert, src: str, params) -> Optional[DataFrame]:
         path = self._managed(ins.table)
         cols = self._table_fields(ins.table)
-        cur = self._managed_df(ins.table, path)
+        snap = self._snapshot(path)
+        # only ON CONFLICT reads the table's rows; a known schema names
+        # the columns without building a read
+        cur = None
+        if ins.on_conflict or snap.schema is None:
+            cur = _read_files(self.spark, path, snap.files, snap.schema)
+        columns = snap.schema.names if cur is None else cur.columns
         an = self._an(src)
         comp = Compiler(self.spark, self.catalog)
         binds = Bindings(params)
@@ -606,10 +834,10 @@ class SqlppEngine:
                     ety = self._check_column_assign(an, elab, ety, cols[cname], src)
                     vals.append(comp.expr(elab, binds, {}).cast(spark_type(cols[cname])).alias(cname))
                 row_cols.append(vals)
-            new_df = None
-            for vals in row_cols:
-                one = self.spark.range(1).select(*vals)
-                new_df = one if new_df is None else new_df.unionByName(one)
+            # every row in one partition, so an append writes one file
+            new_df = self.spark.range(1, numPartitions=1).select(F.inline(
+                F.array(*[F.struct(*vals) for vals in row_cols])
+            ))
         else:
             from sqlpp_spark.frontend.analyze import SetOpCtx
 
@@ -658,7 +886,7 @@ class SqlppEngine:
                 if cty.non_null:
                     raise SqlppError(f"missing required column: {cname}")
                 new_df = new_df.withColumn(cname, F.lit(None).cast(spark_type(cty)))
-        new_df = new_df.select(*[c for c in cur.columns])
+        new_df = new_df.select(*columns)
 
         pk = self._primary_key(ins.table)
         if ins.on_conflict and not pk:
@@ -667,30 +895,56 @@ class SqlppEngine:
             raise SqlppError(
                 f"ON CONFLICT requires a primary key on {ins.table}"
             )
-        if ins.on_conflict and pk:
-            on = [new_df[k] == cur[k] for k in pk]
-            cond = on[0]
-            for c in on[1:]:
-                cond = cond & c
-            if ins.on_conflict == "ignore":
-                new_df = new_df.join(cur, on=cond, how="left_anti")
-                result = cur.unionByName(new_df)
-            else:  # replace: new rows win (correct upsert — unlike
-                # the reference's broken ON CONFLICT DO UPDATE printer,
-                # printer.ml:290 / SURVEY §2.11)
-                keep = cur.join(new_df, on=cond, how="left_anti")
-                result = keep.unionByName(new_df)
-        else:
+        if not ins.on_conflict:
+            # a plain INSERT writes only its own rows. A VALUES list of
+            # literals and parameters reads no table file and evaluates
+            # the same every time, so its RETURNING frame needs no
+            # checkpoint
+            literal = ins.values is not None and all(
+                _is_literal(e) for row in ins.values for e in row
+            )
+            ret = self._returning(
+                new_df, ins.returning, src, ins.table, checkpoint=not literal
+            ) if ins.returning else None
+            # rows of bare literals and parameters are known here already
+            rows = [
+                {c: _constant(e, params) for c, e in zip(ins.columns, row)}
+                for row in ins.values
+            ] if literal else None
+            if rows and any(_NOT_CONSTANT in r.values() for r in rows):
+                rows = None
+            self.catalog[ins.table] = self._commit_change(
+                ins.table, path, snap, [], new_df, rows
+            )
+            return ret
+        on = [new_df[k] == cur[k] for k in pk]
+        cond = on[0]
+        for c in on[1:]:
+            cond = cond & c
+        if ins.on_conflict == "ignore":
+            new_df = new_df.join(cur, on=cond, how="left_anti")
             result = cur.unionByName(new_df)
+        else:  # replace: new rows win (correct upsert — unlike
+            # the reference's broken ON CONFLICT DO UPDATE printer,
+            # printer.ml:290 / SURVEY §2.11)
+            keep = cur.join(new_df, on=cond, how="left_anti")
+            result = keep.unionByName(new_df)
         # materialize RETURNING before the rewrite invalidates sources
         ret = self._returning(new_df, ins.returning, src, ins.table) if ins.returning else None
-        self._rewrite(ins.table, path, result)
+        self.catalog[ins.table] = self._commit_change(
+            ins.table, path, snap, snap.files, result
+        )
         return ret
 
     def _exec_update(self, upd: A.Update, src: str, params) -> Optional[DataFrame]:
         path = self._managed(upd.table)
         cols = self._table_fields(upd.table)
-        cur = self._managed_df(upd.table, path)
+        snap = self._snapshot(path)
+        # the rows an UPDATE can change all sit in the files it touches;
+        # a joined UPDATE ... FROM touches every file
+        touched = snap.files if upd.from_ is not None else self._touched(
+            upd.table, upd.alias, snap, upd.where, params)
+        cur = _read_files(self.spark, path, touched, snap.schema)
         # analyze SET/WHERE in the table's scope (+ optional FROM rels)
         sel = A.Select(from_=A.FromTable(upd.table, None))
         if upd.from_ is not None:
@@ -825,7 +1079,9 @@ class SqlppEngine:
                 *[set_cols.get(c, F.col(f"{upd.table}.{c}")).alias(c) for c in cur.columns]
             )
         ret = self._returning(updated, upd.returning, src, upd.table) if upd.returning else None
-        self._rewrite(upd.table, path, result)
+        self.catalog[upd.table] = self._commit_change(
+            upd.table, path, snap, touched, result if touched else None
+        )
         return ret
 
     def _set_columns(self, upd, cols, an, ctx, comp, binds, df):
@@ -917,7 +1173,9 @@ class SqlppEngine:
     def _exec_delete(self, dele: A.Delete, src: str, params) -> Optional[DataFrame]:
         path = self._managed(dele.table)
         cols = self._table_fields(dele.table)
-        cur = self._managed_df(dele.table, path).alias(dele.table)
+        snap = self._snapshot(path)
+        touched = self._touched(dele.table, dele.alias, snap, dele.where, params)
+        cur = _read_files(self.spark, path, touched, snap.schema).alias(dele.table)
         an = self._an(src)
         from sqlpp_spark.frontend.analyze import SelectCtx, TableRel
 
@@ -940,15 +1198,19 @@ class SqlppEngine:
             deleted = cur.filter(cond)
             remaining = cur.filter(~F.coalesce(cond, F.lit(False)))
         ret = self._returning(deleted, dele.returning, src, dele.table) if dele.returning else None
-        self._rewrite(dele.table, path, remaining)
+        self.catalog[dele.table] = self._commit_change(
+            dele.table, path, snap, touched, remaining if touched else None
+        )
         return ret
 
     def _returning(
-        self, df: DataFrame, fields: List[A.Field], src: str, table: str
+        self, df: DataFrame, fields: List[A.Field], src: str, table: str,
+        checkpoint: bool = True,
     ) -> DataFrame:
         """RETURNING projects arbitrary expressions over the affected
         rows, analyzed in the target table's scope (updatesyn/insertsyn
-        field lists, syntax.ml:164-196)."""
+        field lists, syntax.ml:164-196). ``checkpoint=False`` returns
+        the projection as is, for rows that read no table file."""
         from sqlpp_spark.frontend.analyze import Analyzer, SelectCtx, TableRel
 
         tcols = self._table_fields(table)
@@ -968,6 +1230,8 @@ class SqlppEngine:
             else:
                 name = f"_{i}"
             cols.append(comp.expr(elab, binds, {}).alias(name))
+        if not checkpoint:
+            return base.select(*cols)
         # materialize: the caller rewrites the table right after, and a
         # later commit deletes the version a lazy plan would read. One
         # eager local checkpoint (one job) keeps the rows in executor
@@ -984,20 +1248,43 @@ class SqlppEngine:
             return []
         return [c.name for c in ti.decl.columns if c.primary_key]
 
+    def _touched(self, table: str, alias: Optional[str], snap: Snapshot,
+                 where, params) -> list:
+        """The files of ``snap`` an UPDATE/DELETE with this WHERE can
+        change. A top-level ``pk = v`` or ``pk IN (v, ...)`` conjunct,
+        each ``v`` a literal or parameter, limits them to the files whose
+        recorded key range can hold a value; any other WHERE touches
+        every file."""
+        pk = self._primary_key(table)
+        if snap.schema is None:
+            return snap.files  # an empty read needs the schema
+        for conj in self._split_conjuncts(where):
+            if isinstance(conj, A.EApp) and conj.fn == "=" and len(conj.args) == 2:
+                a, b = conj.args
+                pairs = [(a, [b]), (b, [a])]
+            elif isinstance(conj, A.EInList) and not conj.negated:
+                pairs = [(conj.expr, conj.items)]
+            else:
+                continue
+            for col_e, val_es in pairs:
+                if isinstance(col_e, A.ENav) and col_e.scope in (table, alias):
+                    col_e = col_e.expr
+                vals = [_constant(e, params) for e in val_es]
+                if (isinstance(col_e, A.EName) and col_e.name in pk
+                        and _NOT_CONSTANT not in vals):
+                    return [f for f in snap.files
+                            if _may_hold(f, col_e.name, vals)]
+        return snap.files
+
     def _rewrite(self, table: str, path: str, df: DataFrame) -> None:
-        """Crash-atomic full-table rewrite: write a fresh version dir,
-        then flip the _CURRENT pointer (commit_version protocol above).
-        The plan reading the old version is untouched while the new one
-        writes, and a crash anywhere leaves the old version active.
-        With delta-spark on the classpath this is a real ACID overwrite
-        commit instead. Inside a migration transaction the write only
-        STAGES (no _CURRENT flip); the catalog reads the staged version
-        so later actions in the same migration see it."""
-        if self._txn is not None and not _HAS_DELTA:
-            staged = self._txn.stage_write(path, df)
-            self.catalog[table] = self.spark.read.parquet(staged)
-            return
-        self.catalog[table] = self._commit(path, df)
+        """Crash-atomic full-table rewrite (schema evolution): ``df``
+        becomes a version that inherits no file. Inside a migration
+        transaction the write only STAGES (no _CURRENT flip); the catalog
+        reads the staged version so later actions in the same migration
+        see it."""
+        self.catalog[table] = self._commit_change(
+            table, path, Snapshot([], None), [], df
+        )
 
     def prepare_select_in(self, src: str, sel: A.Select):
         an = self._an(src)

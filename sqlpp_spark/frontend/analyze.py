@@ -2741,6 +2741,10 @@ class Analyzer:
                 t = self._adopt_param(e.args[0], NUMERIC.with_non_null(False), e.loc)
             if fnl in ("sum", "avg", "sum_distinct", "avg_distinct"):
                 check_subsumes(t, NUMERIC.nullable(), e.loc, self.src or None)
+            if ctx.select.group_by == []:
+                # a global aggregate (GROUP BY ()) over no rows returns
+                # one row of NULL, whatever its argument's nullability
+                t = t.with_non_null(False)
             if fnl in ("avg", "avg_distinct"):
                 return e, Ty(frozenset({"float"}), t.non_null)
             return e, t

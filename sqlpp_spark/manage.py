@@ -48,8 +48,10 @@ from pyspark.sql import DataFrame, functions as F
 from sqlpp_spark.engine import (
     SqlppEngine,
     StagedTxn,
+    commit_version,
     flip_current,
-    managed_data_dir,
+    read_managed_version,
+    read_snapshot,
 )
 from sqlpp_spark.frontend import ast as A
 from sqlpp_spark.frontend.errors import SqlppError
@@ -121,7 +123,7 @@ class Migrate:
         if not _has_committed_data(path):
             return []
         rows = (
-            self.engine.spark.read.parquet(managed_data_dir(path))
+            read_managed_version(self.engine.spark, path)
             .orderBy("id")
             .select("name")
             .collect()
@@ -129,24 +131,19 @@ class Migrate:
         return [r.name for r in rows]
 
     def _record(self, idx: int, name: str, txn: Optional[StagedTxn]) -> None:
-        """Stage (or commit) the full track table with the new row —
-        the record rides the migration's transaction, so 'applied' and
-        'storage effects visible' flip together."""
-        spark = self.engine.spark
-        row = spark.createDataFrame(
+        """Append the new row to the track table as a version that
+        inherits every committed file — staged when the record rides the
+        migration's transaction, so 'applied' and 'storage effects
+        visible' flip together."""
+        row = self.engine.spark.createDataFrame(
             [(idx, name)], "id int, name string"
         ).withColumn("applied_at", F.current_timestamp())
         path = self._track_path()
-        if _has_committed_data(path):
-            full = spark.read.parquet(managed_data_dir(path)).unionByName(row)
-        else:
-            full = row
+        keep = read_snapshot(path).files if _has_committed_data(path) else []
         if txn is not None:
-            txn.stage_write(path, full)
+            txn.stage_write(path, row.write.parquet, keep, row.schema)
         else:
-            from sqlpp_spark.engine import commit_version
-
-            commit_version(path, lambda d: full.write.parquet(d))
+            commit_version(path, row.write.parquet, keep, row.schema)
 
     # -- apply -------------------------------------------------------------
 
@@ -216,7 +213,7 @@ class Migrate:
             for name, p in list(eng.managed_paths.items()):
                 eng.managed_paths[name] = _translate(p, trans)
         for name, p in eng.managed_paths.items():
-            eng.catalog[name] = eng._read_managed_path(p)
+            eng.catalog[name] = read_managed_version(eng.spark, p)
 
     def _abort_txn(self) -> None:
         """In-process failure before the manifest: delete staged dirs
@@ -320,7 +317,7 @@ class Migrate:
             path = os.path.join(self.root, f"{name}.parquet")
             if _has_committed_data(path) and name not in eng.managed_paths:
                 eng.managed_paths[name] = path
-                eng.catalog[name] = eng._read_managed_path(path)
+                eng.catalog[name] = read_managed_version(eng.spark, path)
 
     def _env_ddl_applied(self, ddl) -> bool:
         """Replay idempotence: did this evolution already reach the
@@ -391,7 +388,7 @@ class Migrate:
         path = eng.managed_paths.get(ddl.table)
         if path is None:
             return  # env-only table (no storage to evolve)
-        df = eng._managed_df(ddl.table, path)
+        df = eng._managed_df(path)
         if isinstance(ddl, A.DdlRenameTable):
             new_path = os.path.join(os.path.dirname(path), f"{ddl.new_name}.parquet")
             del eng.managed_paths[ddl.table]
@@ -408,7 +405,7 @@ class Migrate:
                 return
             shutil.move(path, new_path)
             eng.managed_paths[ddl.new_name] = new_path
-            eng.catalog[ddl.new_name] = eng._read_managed_path(new_path)
+            eng.catalog[ddl.new_name] = read_managed_version(eng.spark, new_path)
             return
         if isinstance(ddl, A.DdlRenameColumn):
             out = df.withColumnRenamed(ddl.column, ddl.new_name)

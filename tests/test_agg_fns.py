@@ -183,6 +183,25 @@ def test_empty_group_nulls(eng):
     assert cs is None and ba is None and sd is None
 
 
+def test_global_agg_over_no_rows_is_nullable(eng, duck):
+    """A global aggregate of a NOT NULL column is typed nullable: over
+    no rows it returns one row of NULL, in Spark as in DuckDB."""
+    src = (
+        "select max(t.a) as m, sum(t.a) as s, avg(t.a) as av, "
+        "count(t.a) as n from t where t.a > 99 group by ()"
+    )
+    assert row_sig(eng.env, src) == [
+        ("m", "INT NULL"), ("s", "INT NULL"), ("av", "FLOAT NULL"),
+        ("n", "INT NOT NULL"),
+    ]
+    _differ(eng, duck, src)
+    assert [tuple(r) for r in eng.fetch_list(src)] == [(None, None, None, 0)]
+    # grouped, every group has a row: the argument's nullability stands
+    assert row_sig(eng.env, "select t.a as a, max(t.a) as m from t group by t.a") == [
+        ("a", "INT NOT NULL"), ("m", "INT NOT NULL"),
+    ]
+
+
 def test_scalar_subquery_with_stddev(eng, duck):
     # new aggregates flow through the scalar-subquery compile path
     _differ(

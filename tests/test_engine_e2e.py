@@ -708,6 +708,10 @@ def test_returning_stays_off_driver(todo_engine, tmp_path):
 
     todo_engine.exec("update todos set title = 'moved' where id = 2")
     todo_engine.exec("delete from todos where id = 1")
+    # the version dir goes once no retained manifest lists its files:
+    # the row 1 file it also holds is dropped by the DELETE and retired
+    # one commit later
+    todo_engine.exec("update todos set title = 'again' where id = 2")
     assert not os.path.exists(source)
     todo_engine.spark.catalog.clearCache()
     assert [tuple(r) for r in ret.collect()] == [(2, "ship engine")]
@@ -728,14 +732,16 @@ def _exec_jobs(eng, src):
 
 
 def test_dml_write_job_counts(todo_engine):
-    """A plain write runs one job (the version write): the version it
-    reads and the one it commits both have a known schema, so neither
-    read back infers it. RETURNING adds exactly one job, the
-    checkpoint of the affected rows."""
+    """An UPDATE or DELETE runs one job (the version write): the version
+    it reads and the one it commits both have a known schema, so neither
+    read back infers it. RETURNING adds exactly one job, the checkpoint
+    of the affected rows. An INSERT ... VALUES of literals runs none: its
+    rows are written in-process with pyarrow and returned as they are,
+    since they read no table file."""
     assert _exec_jobs(
         todo_engine,
         "insert into todos (id, title, done) values (3, 'profile', false)",
-    ) == 1
+    ) == 0
     assert _exec_jobs(todo_engine, "delete from todos where id = 3") == 1
     assert _exec_jobs(
         todo_engine, "update todos set done = true where id = 2"
@@ -744,17 +750,27 @@ def test_dml_write_job_counts(todo_engine):
         todo_engine,
         "insert into todos (id, title, done) values (4, 'x', false) "
         "returning id",
-    ) == 2
+    ) == 0
     assert _exec_jobs(
         todo_engine,
         "update todos set title = 'y' where id = 4 returning id, title",
     ) == 2
+    # a value that needs a Spark cast or function goes through a write job
+    assert _exec_jobs(
+        todo_engine,
+        "insert into todos (id, title, done) values (2 + 3, 'z', false)",
+    ) == 1
+    rows = todo_engine.fetch_list("select id, title, done from todos order by id")
+    assert [tuple(r) for r in rows] == [
+        (1, "write tests", False), (2, "ship engine", True), (4, "y", False),
+        (5, "z", False),
+    ]
 
 
 def test_dml_sees_commit_by_another_engine(spark, todo_engine, tmp_path):
-    """A commit to the same path by a second engine replaces the version
-    the first engine remembers: its next DML builds on the new version,
-    and its next read sees both changes."""
+    """After a commit to the same path by a second engine, the first
+    engine's next DML builds on that version, and its next read sees
+    both changes."""
     from sqlpp_spark.engine import managed_data_dir
 
     path = str(tmp_path / "todos")
@@ -777,11 +793,11 @@ def test_dml_sees_commit_by_another_engine(spark, todo_engine, tmp_path):
 
 def test_dml_sees_table_recreated_under_same_path(spark, todo_engine, tmp_path):
     """A table dropped and re-created under the same path starts again
-    at ``_v_0``; the first engine must not take it for the ``_v_0`` it
-    committed itself and read it with that version's schema."""
+    at ``_v_0``; the first engine's next DML reads it with its own
+    schema, not that of the ``_v_0`` it committed itself."""
     import shutil
 
-    from sqlpp_spark.engine import managed_data_dir
+    from sqlpp_spark.engine import read_managed_version
 
     path = str(tmp_path / "todos")
     shutil.rmtree(path)
@@ -792,14 +808,14 @@ def test_dml_sees_table_recreated_under_same_path(spark, todo_engine, tmp_path):
     )
     other.create_managed("todos", path, wider)
     todo_engine.exec("delete from todos where id = 1")
-    got = spark.read.parquet(managed_data_dir(path))
+    got = read_managed_version(spark, path)
     assert got.columns == ["id", "title", "done", "note"]
     assert [tuple(r) for r in got.collect()] == [(2, "b", False, "kept")]
 
 
 def test_insert_widening_schema_matches_disk(spark, tmp_path):
     """After an INSERT whose table was created from a narrower Spark
-    type than the declared one, the schema the engine remembers is the
+    type than the declared one, the schema the manifest records is the
     one on disk."""
     from sqlpp_spark.engine import managed_data_dir
 
@@ -812,7 +828,7 @@ def test_insert_widening_schema_matches_disk(spark, tmp_path):
     eng.exec("insert into t (id, v) values (2, 20)")
     on_disk = spark.read.parquet(managed_data_dir(path)).schema
     assert eng.catalog["t"].schema == on_disk
-    assert eng._managed_df("t", path).schema == on_disk
+    assert eng._managed_df(path).schema == on_disk
     rows = eng.fetch_list("select id, v from t order by id")
     assert [tuple(r) for r in rows] == [(1, 10), (2, 20)]
 

@@ -167,9 +167,10 @@ def test_nested_agg_error(env):
 def test_aggregated_alias_inside_aggregate_is_the_input_column(env):
     # `max(id)` in HAVING/ORDER BY ranges over input rows: the output
     # field `id` (itself an aggregate) must not inline there
+    # (nullable: a global aggregate over no rows is NULL)
     src = ("select max(id) + 1 as id from users group by () "
            "having max(id) < 5 order by max(id)")
-    assert row_sig(env, src) == [("id", "INT NOT NULL")]
+    assert row_sig(env, src) == [("id", "INT NULL")]
 
 
 def test_non_grouped_column_error(env):

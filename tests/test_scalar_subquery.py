@@ -299,8 +299,13 @@ def test_dml_set_scalar_subquery(eng, spark, tmp_path):
     con.execute("CREATE TABLE src (id BIGINT, amt BIGINT)")
     con.executemany("INSERT INTO src VALUES (?,?)", src_rows)
 
+    # a global aggregate is NULL over no rows, so it cannot feed the
+    # NOT NULL column v on its own
+    with pytest.raises(SqlppError):
+        e2.exec("update items set v = (select max(amt) from src group by ()) "
+                "where id = 1")
     stmts = [
-        "update items set v = (select max(amt) from src group by ()) "
+        "update items set v = coalesce((select max(amt) from src group by ()), v) "
         "where id = 1 returning id, v",
         "update items set w = (select max(amt) from src "
         "where src.id = items.id and src.amt > 150 group by ()) "
