@@ -395,13 +395,20 @@ def _duck_try_cast_timestamp(raw: str) -> str:
     def tg(name):
         return _tc_group(x, _TC_TIME_PAT, _TC_TIME_NAMES, name)
 
+    # Spark anchors a time-only string on today's date in the string's
+    # own offset, which may be another day than UTC's
+    off = _tc_offset_secs(tg)
+    today = (
+        "CAST(CAST((current_timestamp AT TIME ZONE 'UTC') "
+        f"+ to_seconds({off}) AS DATE) AS VARCHAR)"
+    )
     time_only = _tc_ts_from_parts(
-        "CAST(current_date AS VARCHAR)",
+        today,
         tg("h"),
         tg("mi"),
         _tc_or_default(tg("s"), "0"),
         f"coalesce(nullif(substr({tg('fr')}, 1, 6), ''), '0')",
-        _tc_offset_secs(tg),
+        off,
     )
     return (
         f"(CASE WHEN regexp_matches({x}, {_tc_sq(_TC_TS_PAT)}) THEN {main} "

@@ -20,9 +20,14 @@ Mirrors the reference's runtime shapes (SURVEY.md §2.10):
   the affected rows held in executor block storage; it lives as long as
   the returned DataFrame and does not survive the loss of an executor.
   An INSERT ... VALUES of literals returns its rows' frame as is: it
-  reads no table file. When its values are bare literals or parameters
-  of bigint, double, string or boolean columns, the engine writes them
-  itself with pyarrow, and the INSERT runs no Spark job at all
+  reads no table file. Two kinds of write run no Spark job at all, on
+  tables of bigint, double, string and boolean columns: an INSERT whose
+  values are bare literals or parameters, which the engine writes itself
+  with pyarrow; and an UPDATE or DELETE whose WHERE is one primary-key
+  ``=`` or ``IN`` of such constants and whose SET values are such
+  constants too. pyarrow rewrites the files that UPDATE/DELETE touches,
+  and its RETURNING projects a literal frame of the changed rows
+  (``SqlppEngine._by_key``)
 """
 
 from __future__ import annotations
@@ -67,10 +72,12 @@ from sqlpp_spark.frontend.types import Ty, check_subsumes, ty as mk_ty
 #                       min/max of the primary-key columns
 #     _CURRENT          text file naming the active version
 #
-# A commit writes only what it changed into a fresh version dir, reads
-# the new files' parquet footers in-process (pyarrow, no Spark job),
-# writes the manifest, then flips _CURRENT with os.replace — the
-# POSIX-atomic commit point. Readers of the old version are untouched.
+# A commit writes only what it changed into a fresh version dir — by a
+# Spark job, or in-process with pyarrow for literal INSERT rows and for
+# by-key UPDATE/DELETE rewrites of at most _LOCAL_ROWS rows — reads the
+# new files' parquet footers in-process (pyarrow, no Spark job), writes
+# the manifest, then flips _CURRENT with os.replace — the POSIX-atomic
+# commit point. Readers of the old version are untouched.
 # Crash before the flip: the old version stays active and the orphan dir
 # is garbage. After the flip, GC deletes every file that no retained
 # manifest references: the new version's, its predecessor's (kept one
@@ -387,6 +394,20 @@ def _constant(e, params):
     return _NOT_CONSTANT
 
 
+def _stored(e, params, dt: T.DataType):
+    """The value of a literal or parameter ``e`` when a ``dt`` column
+    stores it as it is: NULL or a value of ``dt``'s own Python type
+    (``_own_value``), and a parameter's ascription, if any, names ``dt``
+    (Spark casts a parameter to its ascribed type first). Else
+    _NOT_CONSTANT."""
+    v = _constant(e, params)
+    asc = e.ascribed if isinstance(e, A.EParam) else None
+    if not _own_value(v, dt) or (
+            asc is not None and spark_type(asc) != dt.simpleString()):
+        return _NOT_CONSTANT
+    return v
+
+
 def _may_hold(entry: dict, col: str, vals: list) -> bool:
     """Can the file behind a manifest entry hold a row whose ``col``
     equals one of ``vals``? Only an int or string compared with a
@@ -402,47 +423,136 @@ def _may_hold(entry: dict, col: str, vals: list) -> bool:
     )
 
 
-# column types an append may write in-process: Spark type -> (Arrow type,
-# the Python types whose values need no cast to it)
+# column types the engine may write in-process: Spark type -> (Arrow type,
+# the column's own Python type)
 _LOCAL_TYPES = {
-    T.LongType: ("int64", (int,)),
-    T.DoubleType: ("float64", (int, float)),
-    T.StringType: ("string", (str,)),
-    T.BooleanType: ("bool", (bool,)),
+    T.LongType: ("int64", int),
+    T.DoubleType: ("float64", float),
+    T.StringType: ("string", str),
+    T.BooleanType: ("bool", bool),
 }
+# the most rows a by-key UPDATE/DELETE reads into the driver to rewrite
+# its files in-process (the touched files plus the small files the
+# commit folds); a larger change goes through a Spark job
+_LOCAL_ROWS = 1 << 20
 
 
-def _local_write(rows: list, schema: T.StructType):
-    """A ``write`` that stores ``rows`` (dicts of Python values, a
-    missing column is NULL) as one parquet file in-process, with no
-    Spark job — or None unless every column of ``schema`` is bigint,
-    double, string or boolean and every value already has its column's
-    Python type, so no Spark cast could differ."""
+def _own_value(v, dt: T.DataType) -> bool:
+    """Is ``v`` NULL or a value of ``dt``'s own Python type (an int
+    within bigint's range), so that storing it needs no Spark cast?"""
+    py = _LOCAL_TYPES.get(type(dt), (None, None))[1]
+    return v is None or (type(v) is py and (py is not int or -2**63 <= v < 2**63))
+
+
+def _arrow_schema(schema: T.StructType):
+    """The Arrow form of ``schema``, every field nullable — or None
+    unless every column is bigint, double, string or boolean."""
     import pyarrow as pa
 
+    if any(type(f.dataType) not in _LOCAL_TYPES for f in schema):
+        return None
+    return pa.schema([(f.name, _LOCAL_TYPES[type(f.dataType)][0]) for f in schema])
+
+
+def _arrow_rows(rows: list, schema: T.StructType):
+    """``rows`` (dicts of Python values, a missing column is NULL) as an
+    Arrow table — or None unless every column of ``schema`` is bigint,
+    double, string or boolean and every value already has its column's
+    Python type (an int may go into a double), so no Spark cast could
+    differ."""
+    import pyarrow as pa
+
+    target = _arrow_schema(schema)
+    if target is None:
+        return None
     arrays = []
     for f in schema:
-        arrow_type, py_types = _LOCAL_TYPES.get(type(f.dataType), (None, ()))
         vals = [r.get(f.name) for r in rows]
-        if arrow_type is None or any(
-            v is not None and (type(v) not in py_types or (
-                arrow_type == "int64" and not -2**63 <= v < 2**63))
-            for v in vals
-        ):
+        if not all(_own_value(v, f.dataType) or (
+                type(v) is int and isinstance(f.dataType, T.DoubleType))
+                for v in vals):
             return None
-        if arrow_type == "float64":
+        if isinstance(f.dataType, T.DoubleType):
             vals = [None if v is None else float(v) for v in vals]
-        arrays.append(pa.array(vals, arrow_type))
-    table = pa.Table.from_arrays(arrays, names=schema.names)
+        arrays.append(pa.array(vals, target.field(f.name).type))
+    return pa.Table.from_arrays(arrays, schema=target)
+
+
+def _arrow_read(path: str, files: list, schema: T.StructType):
+    """The rows of the manifest entries ``files`` of a managed table as
+    one Arrow table of ``schema``, read in-process with pyarrow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = _arrow_schema(schema)
+    return pa.concat_tables([
+        pq.read_table(os.path.join(path, f["path"]), columns=schema.names)
+        .cast(target) for f in files
+    ])
+
+
+def _arrow_write(table):
+    """A ``write`` that stores an Arrow table as one parquet file
+    in-process, with no Spark job."""
 
     def write(d: str) -> None:
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         os.makedirs(d)
         name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
-        pq.write_table(table, os.path.join(d, name), compression="snappy")
+        # pyarrow keeps the dictionary page of a column whose dictionary
+        # overflows, where Spark's writer falls back to plain encoding;
+        # a near-unique column (the key) would grow the file by a third
+        dictionary = [c for c in table.column_names
+                      if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
+        pq.write_table(table, os.path.join(d, name), compression="snappy",
+                       use_dictionary=dictionary)
 
     return write
+
+
+def _values_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """``rows``, lists of aliased Columns, as a frame of one partition.
+    Rows of constants fold into a local relation, which reads no file
+    and runs no job when collected."""
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*[F.struct(*r) for r in rows]))
+    )
+
+
+def _literal_frame(spark: SparkSession, rows: list,
+                   schema: T.StructType) -> DataFrame:
+    """``rows``, dicts of Python values, as a ``schema`` frame of
+    literals (``_values_frame``)."""
+    lits = [[F.lit(r.get(f.name)).cast(f.dataType).alias(f.name) for f in schema]
+            for r in rows or [{}]]
+    df = _values_frame(spark, lits)
+    return df if rows else df.limit(0)
+
+
+def _key_rewrite(path: str, files: list, schema: T.StructType, key: str,
+                 vals: list, new: Optional[dict]):
+    """Rewrite ``files`` in-process for a by-key change: the rows whose
+    ``key`` is one of ``vals`` (NULL matches nothing) match. ``new``
+    ({column: value}, an UPDATE) replaces those columns of the matches
+    in place; None (a DELETE) drops them. Returns the files' rows after
+    the change as one Arrow table, and the changed rows as dicts: the
+    new ones of an UPDATE, the old ones of a DELETE."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = _arrow_read(path, files, schema)
+    hit = pc.is_in(rows[key], value_set=pa.array(
+        [v for v in vals if v is not None], rows.schema.field(key).type))
+    if new is None:
+        return rows.filter(pc.invert(hit)), rows.filter(hit).to_pylist()
+    for c, v in new.items():
+        i = rows.schema.get_field_index(c)
+        field = rows.schema.field(i)
+        rows = rows.set_column(
+            i, field, pc.if_else(hit, pa.scalar(v, field.type), rows[c]))
+    return rows, rows.filter(hit).to_pylist()
 
 
 def _is_literal(e) -> bool:
@@ -652,38 +762,52 @@ class SqlppEngine:
 
     def _commit_change(
         self, table: str, path: str, snap: Snapshot, drop: list,
-        add: Optional[DataFrame], rows: Optional[list] = None,
+        add, rows: Optional[list] = None,
     ) -> DataFrame:
         """Commit the next version of ``table`` — ``snap``'s files minus
-        ``drop`` plus the rows of ``add`` (None: no rows, no Spark job) —
-        and return a fresh read of it. Inside a migration transaction the
-        version is only staged. An ``add`` whose column types differ from
-        the kept files' (a value wider than the stored column) rewrites
-        the whole table under the unioned types; otherwise the write also
-        folds the small kept files (``_fold``) into one file. ``rows``,
-        ``add``'s rows as Python values, let a commit that neither
-        rewrites nor folds write them in-process (``_local_write``)."""
+        ``drop`` plus the rows of ``add`` — and return a fresh read of it.
+        Inside a migration transaction the version is only staged.
+        ``add`` is a DataFrame, which a Spark job writes; an Arrow table
+        of rows in the stored schema, which the engine writes in-process;
+        or None, no rows. A DataFrame whose column types differ from the
+        kept files' (a value wider than the stored column) rewrites the
+        whole table under the unioned types; otherwise the write also
+        folds the small kept files (``_fold``) into one file, read by
+        Spark into a DataFrame and with pyarrow into an Arrow table.
+        ``rows``, a DataFrame's rows as Python values, let a commit that
+        neither rewrites nor folds write them in-process
+        (``_arrow_rows``)."""
         gone = {f["path"] for f in drop}
         keep = [f for f in snap.files if f["path"] not in gone]
-        schema = snap.schema if add is None else add.schema
-        if keep and add is not None:
-            stored = snap.schema or _read_files(self.spark, path, keep, None).schema
-            if [(f.name, f.dataType) for f in schema] != [
-                (f.name, f.dataType) for f in stored
-            ]:
-                kept = _read_files(self.spark, path, keep, snap.schema)
-                add, keep, rows = kept.unionByName(add), [], None
-                schema = add.schema
-            elif fold := _fold(keep):
+        if add is None or isinstance(add, DataFrame):
+            schema = snap.schema if add is None else add.schema
+            if keep and add is not None:
+                stored = snap.schema or _read_files(self.spark, path, keep, None).schema
+                if [(f.name, f.dataType) for f in schema] != [
+                    (f.name, f.dataType) for f in stored
+                ]:
+                    kept = _read_files(self.spark, path, keep, snap.schema)
+                    add, keep, rows = kept.unionByName(add), [], None
+                    schema = add.schema
+                elif fold := _fold(keep):
+                    folded = {f["path"] for f in fold}
+                    keep = [f for f in keep if f["path"] not in folded]
+                    add = add.unionByName(
+                        _read_files(self.spark, path, fold, snap.schema).coalesce(1)
+                    )
+                    rows = None
+            write = None if add is None else add.write.parquet
+            if rows is not None and (local := _arrow_rows(rows, schema)) is not None:
+                write = _arrow_write(local)
+        else:
+            import pyarrow as pa
+
+            schema = snap.schema
+            if fold := _fold(keep):
                 folded = {f["path"] for f in fold}
                 keep = [f for f in keep if f["path"] not in folded]
-                add = add.unionByName(
-                    _read_files(self.spark, path, fold, snap.schema).coalesce(1)
-                )
-                rows = None
-        write = None if add is None else add.write.parquet
-        if rows is not None:
-            write = _local_write(rows, schema) or write
+                add = pa.concat_tables([add, _arrow_read(path, fold, schema)])
+            write = _arrow_write(add) if add.num_rows else None
         keys = self._primary_key(table)
         if self._txn is not None:
             vdir = self._txn.stage_write(path, write, keep, schema, keys)
@@ -835,9 +959,7 @@ class SqlppEngine:
                     vals.append(comp.expr(elab, binds, {}).cast(spark_type(cols[cname])).alias(cname))
                 row_cols.append(vals)
             # every row in one partition, so an append writes one file
-            new_df = self.spark.range(1, numPartitions=1).select(F.inline(
-                F.array(*[F.struct(*vals) for vals in row_cols])
-            ))
+            new_df = _values_frame(self.spark, row_cols)
         else:
             from sqlpp_spark.frontend.analyze import SetOpCtx
 
@@ -944,7 +1066,7 @@ class SqlppEngine:
         # a joined UPDATE ... FROM touches every file
         touched = snap.files if upd.from_ is not None else self._touched(
             upd.table, upd.alias, snap, upd.where, params)
-        cur = _read_files(self.spark, path, touched, snap.schema)
+        by_key = self._by_key(upd, snap, touched, params)
         # analyze SET/WHERE in the table's scope (+ optional FROM rels)
         sel = A.Select(from_=A.FromTable(upd.table, None))
         if upd.from_ is not None:
@@ -955,6 +1077,11 @@ class SqlppEngine:
 
         ctx = SelectCtx(sel)
         ctx.rels[upd.table] = TableRel(upd.table, cols, table=upd.table)
+        if by_key is not None:
+            an.infer_expr(ctx, upd.where)
+            self._analyze_sets(upd, cols, an, ctx)
+            return self._commit_by_key(upd, path, snap, touched, by_key, src)
+        cur = _read_files(self.spark, path, touched, snap.schema)
         comp = Compiler(self.spark, self.catalog)
         binds = Bindings(params)
         base = cur.alias(upd.table)
@@ -1092,13 +1219,7 @@ class SqlppEngine:
         caller's, since the compiled set columns reference them.
         Returns (df, {col: Column})."""
         set_cols: Dict[str, Column] = {}
-        elabs = []
-        for cname, e in upd.sets:
-            if cname not in cols:
-                raise SqlppError(f"no such column: {cname}")
-            elab, ety = an.infer_expr(ctx, e)
-            self._check_column_assign(an, elab, ety, cols[cname], an.src)
-            elabs.append((cname, elab))
+        elabs = self._analyze_sets(upd, cols, an, ctx)
         df, scalar_map = comp._attach_scalar_subqueries(
             df, [elab for _c, elab in elabs], binds
         )
@@ -1107,6 +1228,18 @@ class SqlppEngine:
                 spark_type(cols[cname])
             )
         return df, set_cols
+
+    def _analyze_sets(self, upd, cols, an, ctx) -> list:
+        """Elaborate the SET expressions in ``ctx`` and check each against
+        its column's declared type: ``[(column, elaborated expr)]``."""
+        elabs = []
+        for cname, e in upd.sets:
+            if cname not in cols:
+                raise SqlppError(f"no such column: {cname}")
+            elab, ety = an.infer_expr(ctx, e)
+            self._check_column_assign(an, elab, ety, cols[cname], an.src)
+            elabs.append((cname, elab))
+        return elabs
 
     @staticmethod
     def _check_column_assign(an: Analyzer, elab: A.Expr, ety: Optional[Ty], cty: Ty, src: str) -> Ty:
@@ -1175,12 +1308,16 @@ class SqlppEngine:
         cols = self._table_fields(dele.table)
         snap = self._snapshot(path)
         touched = self._touched(dele.table, dele.alias, snap, dele.where, params)
-        cur = _read_files(self.spark, path, touched, snap.schema).alias(dele.table)
+        by_key = self._by_key(dele, snap, touched, params)
         an = self._an(src)
         from sqlpp_spark.frontend.analyze import SelectCtx, TableRel
 
         ctx = SelectCtx(A.Select())
         ctx.rels[dele.table] = TableRel(dele.table, cols, table=dele.table)
+        if by_key is not None:
+            an.infer_expr(ctx, dele.where)
+            return self._commit_by_key(dele, path, snap, touched, by_key, src)
+        cur = _read_files(self.spark, path, touched, snap.schema).alias(dele.table)
         comp = Compiler(self.spark, self.catalog)
         binds = Bindings(params)
         if dele.where is not None and A.expr_has_subquery(dele.where):
@@ -1248,33 +1385,101 @@ class SqlppEngine:
             return []
         return [c.name for c in ti.decl.columns if c.primary_key]
 
+    def _key_conjunct(self, table: str, alias: Optional[str], conj, params):
+        """``(pk column, value exprs)`` when ``conj`` is ``pk = v`` or
+        ``pk IN (v, ...)`` (either operand order; the column bare or
+        qualified by the table or its alias), each ``v`` a literal or
+        parameter; else None."""
+        if isinstance(conj, A.EApp) and conj.fn == "=" and len(conj.args) == 2:
+            a, b = conj.args
+            pairs = [(a, [b]), (b, [a])]
+        elif isinstance(conj, A.EInList) and not conj.negated:
+            pairs = [(conj.expr, conj.items)]
+        else:
+            return None
+        pk = self._primary_key(table)
+        for col_e, val_es in pairs:
+            if isinstance(col_e, A.ENav) and col_e.scope in (table, alias):
+                col_e = col_e.expr
+            if (isinstance(col_e, A.EName) and col_e.name in pk and all(
+                    _constant(e, params) is not _NOT_CONSTANT for e in val_es)):
+                return col_e.name, val_es
+        return None
+
     def _touched(self, table: str, alias: Optional[str], snap: Snapshot,
                  where, params) -> list:
         """The files of ``snap`` an UPDATE/DELETE with this WHERE can
-        change. A top-level ``pk = v`` or ``pk IN (v, ...)`` conjunct,
-        each ``v`` a literal or parameter, limits them to the files whose
-        recorded key range can hold a value; any other WHERE touches
-        every file."""
-        pk = self._primary_key(table)
+        change. A top-level ``_key_conjunct`` limits them to the files
+        whose recorded key range can hold one of its values; any other
+        WHERE touches every file."""
         if snap.schema is None:
             return snap.files  # an empty read needs the schema
         for conj in self._split_conjuncts(where):
-            if isinstance(conj, A.EApp) and conj.fn == "=" and len(conj.args) == 2:
-                a, b = conj.args
-                pairs = [(a, [b]), (b, [a])]
-            elif isinstance(conj, A.EInList) and not conj.negated:
-                pairs = [(conj.expr, conj.items)]
-            else:
-                continue
-            for col_e, val_es in pairs:
-                if isinstance(col_e, A.ENav) and col_e.scope in (table, alias):
-                    col_e = col_e.expr
+            hit = self._key_conjunct(table, alias, conj, params)
+            if hit is not None:
+                key, val_es = hit
                 vals = [_constant(e, params) for e in val_es]
-                if (isinstance(col_e, A.EName) and col_e.name in pk
-                        and _NOT_CONSTANT not in vals):
-                    return [f for f in snap.files
-                            if _may_hold(f, col_e.name, vals)]
+                return [f for f in snap.files if _may_hold(f, key, vals)]
         return snap.files
+
+    def _by_key(self, stmt, snap: Snapshot, touched: list, params):
+        """How an UPDATE or DELETE can change its ``touched`` files
+        in-process, with no Spark job: ``(key, values, {column: value})``
+        (None for a DELETE's SETs), or None. It can when
+        - its WHERE is exactly one ``_key_conjunct``, on a key that is not
+          a double (Spark's equality holds 0.0 = -0.0, Arrow's does not);
+        - it has no FROM and no subquery, and every SET value is a
+          literal or parameter;
+        - every key and SET value is stored as it is (``_stored``);
+        - the table is stored as declared, with bigint, double, string
+          or boolean columns only;
+        - the rows it reads, the touched files' and those of the small
+          files the commit folds, are at most ``_LOCAL_ROWS``."""
+        schema = snap.schema
+        sets = stmt.sets if isinstance(stmt, A.Update) else None
+        conjs = self._split_conjuncts(stmt.where)
+        hit = len(conjs) == 1 and self._key_conjunct(
+            stmt.table, stmt.alias, conjs[0], params)
+        if (not hit or getattr(stmt, "from_", None) is not None
+                or any(A.expr_has_subquery(f.expr) for f in stmt.returning)
+                or schema is None or _arrow_schema(schema) is None):
+            return None
+        cols = self._table_fields(stmt.table)
+        if any(f.name not in cols
+               or spark_type(cols[f.name]) != f.dataType.simpleString()
+               for f in schema):
+            return None
+        types = {f.name: f.dataType for f in schema}
+        key, val_es = hit
+        consts = [(key, e) for e in val_es] + list(sets or [])
+        if isinstance(types.get(key), T.DoubleType) or any(
+            c not in types or _stored(e, params, types[c]) is _NOT_CONSTANT
+            for c, e in consts
+        ):
+            return None
+        kept = [f for f in snap.files if f not in touched]
+        read = touched + _fold(kept) if touched else []
+        if sum(f["rows"] for f in read) > _LOCAL_ROWS:
+            return None
+        new = None if sets is None else {c: _constant(e, params) for c, e in sets}
+        return key, [_constant(e, params) for e in val_es], new
+
+    def _commit_by_key(self, stmt, path: str, snap: Snapshot, touched: list,
+                       by_key, src: str) -> Optional[DataFrame]:
+        """Commit an analyzed by-key UPDATE/DELETE the way ``_by_key``
+        found: pyarrow rewrites the touched files (``_key_rewrite``) and
+        RETURNING projects a literal frame of the changed rows, so neither
+        runs a Spark job."""
+        rows, changed = (_key_rewrite(path, touched, snap.schema, *by_key)
+                         if touched else (None, []))
+        ret = self._returning(
+            _literal_frame(self.spark, changed, snap.schema), stmt.returning,
+            src, stmt.table, checkpoint=False,
+        ) if stmt.returning else None
+        self.catalog[stmt.table] = self._commit_change(
+            stmt.table, path, snap, touched, rows
+        )
+        return ret
 
     def _rewrite(self, table: str, path: str, df: DataFrame) -> None:
         """Crash-atomic full-table rewrite (schema evolution): ``df``

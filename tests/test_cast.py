@@ -229,6 +229,8 @@ TEMPORAL_BATTERY = [
     "2021-03-04 00:00:00+18:00:01",
     # time-only forms (current-date anchored on both engines)
     "05:06:07", "T05:06:07", "05:06:07+01:00", "05:06", "T23:59:59.999999Z",
+    # at any hour one of these two offsets is on another date than UTC
+    "05:06:07+14:00", "05:06:07-12:00",
     # range edges + junk ('0001-01-01' is engine-valid but PySpark's
     # Python-side timestamp materialization can't represent it)
     "1000-01-01", "9999-12-31", "2021-03-04 23:59:59", "", "   ", "garbage",

@@ -732,20 +732,23 @@ def _exec_jobs(eng, src):
 
 
 def test_dml_write_job_counts(todo_engine):
-    """An UPDATE or DELETE runs one job (the version write): the version
-    it reads and the one it commits both have a known schema, so neither
-    read back infers it. RETURNING adds exactly one job, the checkpoint
-    of the affected rows. An INSERT ... VALUES of literals runs none: its
-    rows are written in-process with pyarrow and returned as they are,
-    since they read no table file."""
+    """A by-key UPDATE with constant SET values and a by-key DELETE run no
+    Spark job, with or without RETURNING: pyarrow rewrites the touched
+    file, and RETURNING projects the changed rows as literals. An
+    INSERT ... VALUES of literals runs none either: its rows are written
+    in-process with pyarrow and returned as they are. A SET that needs a
+    Spark expression, or a WHERE not on the key, runs one job (the
+    version write: the version it reads and the one it commits both have
+    a known schema, so neither read back infers it), and RETURNING adds
+    one more, the checkpoint of the affected rows."""
     assert _exec_jobs(
         todo_engine,
         "insert into todos (id, title, done) values (3, 'profile', false)",
     ) == 0
-    assert _exec_jobs(todo_engine, "delete from todos where id = 3") == 1
+    assert _exec_jobs(todo_engine, "delete from todos where id = 3") == 0
     assert _exec_jobs(
         todo_engine, "update todos set done = true where id = 2"
-    ) == 1
+    ) == 0
     assert _exec_jobs(
         todo_engine,
         "insert into todos (id, title, done) values (4, 'x', false) "
@@ -754,12 +757,27 @@ def test_dml_write_job_counts(todo_engine):
     assert _exec_jobs(
         todo_engine,
         "update todos set title = 'y' where id = 4 returning id, title",
-    ) == 2
+    ) == 0
+    assert _exec_jobs(
+        todo_engine, "delete from todos where id in (9, 8) returning id"
+    ) == 0
     # a value that needs a Spark cast or function goes through a write job
     assert _exec_jobs(
         todo_engine,
         "insert into todos (id, title, done) values (2 + 3, 'z', false)",
     ) == 1
+    assert _exec_jobs(
+        todo_engine, "update todos set id = 2 + 3 where id = 5"
+    ) == 1
+    assert _exec_jobs(
+        todo_engine, "update todos set id = 2 + 3 where id = 5 returning id"
+    ) == 2
+    assert _exec_jobs(
+        todo_engine, "update todos set done = false where title = 'z'"
+    ) == 1
+    assert _exec_jobs(
+        todo_engine, "delete from todos where title = 'none' returning id"
+    ) == 2
     rows = todo_engine.fetch_list("select id, title, done from todos order by id")
     assert [tuple(r) for r in rows] == [
         (1, "write tests", False), (2, "ship engine", True), (4, "y", False),

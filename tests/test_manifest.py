@@ -216,6 +216,63 @@ def test_crash_before_flip_leaves_table_intact(spark, tmp_path, monkeypatch):
     assert (1, 1, "y") in _rows(eng)
 
 
+@pytest.mark.parametrize("at", ["write", "flip"])
+def test_crash_in_process_by_key_write_leaves_table_intact(
+        spark, tmp_path, monkeypatch, at):
+    """A by-key UPDATE rewrites its file in-process; a crash inside the
+    pyarrow write (leaving a partial file, no _FILES) or after _FILES but
+    before the flip keeps the old version, and the next flip removes the
+    orphan dir."""
+    eng, path = _kv(spark, tmp_path)
+    active = E.managed_data_dir(path)
+
+    def partial(table, where, **_kw):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1\x00partial")
+        raise OSError("crash mid-write")
+
+    def before_flip(*_a):
+        raise OSError("crash before flip")
+
+    with monkeypatch.context() as m:
+        if at == "write":
+            m.setattr(pq, "write_table", partial)
+        else:
+            m.setattr(E, "flip_current", before_flip)
+        m.setattr(E, "_read_files", None)  # no Spark read, so no job
+        with pytest.raises(OSError, match="crash"):
+            eng.exec("update kv set tag = 'x' where id = 1")
+    assert E.managed_data_dir(path) == active
+    orphan = max(d for d in os.listdir(path) if d.startswith("_v_"))
+    assert orphan != os.path.basename(active)
+    left = os.listdir(os.path.join(path, orphan))
+    assert ("_FILES" in left) == (at == "flip")
+    assert any(f.endswith(".parquet") for f in left)
+    assert (1, 1, "t1") in _rows(eng)
+    assert len(_rows(eng)) == 30
+
+    eng.exec("update kv set tag = 'y' where id = 1")
+    assert not os.path.exists(os.path.join(path, orphan))
+    assert (1, 1, "y") in _rows(eng) and len(_rows(eng)) == 30
+
+
+def test_by_key_updates_keep_live_files_bounded(spark, tmp_path):
+    """In-process by-key UPDATEs and DELETEs fold small files like Spark
+    writes do, so the live files stay within the same bound."""
+    eng, path = _kv(spark, tmp_path, n=200, files=1)
+    counts = []
+    for i in range(12):
+        eng.exec(f"insert into kv (id, grp, tag) values ({1000 + i}, 0, 'n')")
+        eng.exec(f"update kv set tag = 'u' where id in ({1000 + i // 2}, {1 + i})")
+        eng.exec(f"delete from kv where id = {100 + i}")
+        counts.append(len(read_snapshot(path).files))
+    assert max(counts) <= 1 + E._FOLD_AT
+    rows = _rows(eng)
+    assert len(rows) == 200
+    assert {r[0] for r in rows if r[2] == "u"} == (
+        set(range(1, 13)) | set(range(1000, 1006)))
+
+
 def test_crash_during_gc_is_finished_by_the_next_commit(spark, tmp_path, monkeypatch):
     eng, path = _kv(spark, tmp_path)
     eng.exec("update kv set tag = 'a' where grp >= 0")  # rewrites all
